@@ -96,13 +96,13 @@ object Bench {
         recordErr: Boolean = true): Meas = {
       spark.catalog.clearCache()
       // r13: clearCache() only drops CATALOG-cached relations; frames a
-      // query localCheckpoints live in the BlockManager until the RDD
-      // object is GC'd, so iterative-loop queries were leaking 1–15
-      // blocks apiece into every later query's run (measured: the
-      // q507–q509 warm runs read consistently SLOWER than their colds
-      // under the accumulation). Same isolation rationale as the
-      // clearCache above, extended to RDD blocks — the measured query
-      // still pays for every block it creates itself.
+      // query localCheckpoints outside a graft.Frames scope live in the
+      // BlockManager until the RDD object is GC'd (measured before the
+      // GraphOps loops moved to Frames: the q507–q509 warm runs read
+      // consistently SLOWER than their colds under the accumulation).
+      // Same isolation rationale as the clearCache above, extended to
+      // RDD blocks — the measured query still pays for every block it
+      // creates itself.
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
       val load0 = osBean.getSystemLoadAverage

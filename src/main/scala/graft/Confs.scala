@@ -18,6 +18,22 @@ object Confs {
   def withShufflePartitions[T](spark: SparkSession, n: Int)(f: => T): T =
     withConf(spark, "spark.sql.shuffle.partitions", n.toString)(f)
 
+  /** Exchange width derived from a row census the caller already holds:
+    * ~500k rows per partition, at least `floor`, capped at the session
+    * width. Derived, not pinned, so a small frame (an iterative loop's
+    * node-sized labels, a drained stream's state) does not pay the
+    * session's scan-width task overhead per exchange, while a
+    * billion-row frame keeps the session's (cluster-sized) width and
+    * scale-curve runs across SPARK_GRAFT_CPUS settings stay comparable.
+    * Iterative loops use floor 8; streaming state uses 4, where the
+    * per-partition state-store fixed cost (open/snapshot/commit per
+    * micro-batch) dominates below the by-volume term's first step. */
+  def derivedWidth(spark: SparkSession, rows: Long, floor: Int): Int = {
+    val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val byVolume = ((rows + 499999L) / 500000L).toInt
+    math.min(session, math.max(floor, byVolume))
+  }
+
   /** Run `f` with one session conf pinned, restoring the prior value
     * (or unsetting, if it had none) after — every exit path. */
   def withConf[T](spark: SparkSession, key: String, value: String)(f: => T): T = {

@@ -30,7 +30,8 @@ object Verify {
       }
       // r13: drop catalog caches AND leftover localCheckpoint blocks
       // between queries (Bench.run's isolation rationale) — a 509-query
-      // sweep otherwise accumulates every loop query's leaked blocks.
+      // sweep otherwise accumulates the blocks of every query that does
+      // not release its own through graft.Frames.
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))

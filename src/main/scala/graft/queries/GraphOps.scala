@@ -1,8 +1,8 @@
 package graft.queries
 
+import graft.Frames
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Dedup cluster resolution (SURVEY §2.3 Tier C): near-dup pair lists
   * (q24–q26) name EDGES, but a dedup policy needs COMPONENTS — "keep one
@@ -44,25 +44,6 @@ object GraphOps {
   private[graft] def maybeBroadcast(rows: Long): DataFrame => DataFrame =
     if (rows <= BroadcastRowCap) broadcast else identity
 
-  /** Exchange width for an iterative loop over NODE-sized frames,
-    * derived from the node census the loop already holds for its
-    * [[maybeBroadcast]] gate (r12, guide §2.2/§2.4): a label-frame
-    * sweep's exchanges carry a few dozen bytes per node, so scheduling
-    * them at the session's scan-width partitioning just multiplies
-    * per-sweep fixed cost (task launch, AQE stage barriers, shuffle
-    * files) — the q497/q490/starContract loops already sweep at 8 for
-    * exactly this reason. Derived, not pinned: ~500k node-rows per
-    * partition, floored at 8 and capped at the session width, so a
-    * billion-node frame keeps the session's (cluster-sized) width and
-    * the driver's scale-curve runs (SPARK_GRAFT_CPUS) stay
-    * comparable. */
-  private[graft] def loopWidth(s: org.apache.spark.sql.SparkSession,
-      rows: Long): Int = {
-    val session = s.conf.get("spark.sql.shuffle.partitions").toInt
-    val byVolume = ((rows + 499999L) / 500000L).toInt
-    math.min(session, math.max(8, byVolume))
-  }
-
   /** Minimum reachable label per node of an undirected edge list.
     * One round = one shuffle-join of labels onto edges + one min-agg;
     * rounds needed = component diameter. At 100 TB-scale graphs with
@@ -77,8 +58,8 @@ object GraphOps {
     * parent twice (propagation + union), so an unpersisted-plan loop
     * pays 2^rounds optimizer work (the q477 lesson; on the dense
     * co-purchase projection rounds 4–5 took 11 s and 34 s of pure
-    * planning before the truncation). */
-  private[graft] def minLabel(edges: DataFrame): DataFrame = {
+    * planning before the truncation). The labels belong to `f`. */
+  private[graft] def minLabel(f: Frames, edges: DataFrame): DataFrame = {
     // The propagation loop runs join+agg PER ROUND over a pair-list-
     // sized frame (thousands of rows at test scale; pair lists are
     // always corpus-sparse). At 32 shuffle partitions each round pays
@@ -87,24 +68,22 @@ object GraphOps {
     // without touching semantics. A 100 TB pair list sizes this UP —
     // the knob is frame volume, the same rule as streaming state
     // partitions (StreamHarness.withStreamingPartitions).
-    graft.Confs.withShufflePartitions(edges.sparkSession, 8)(minLabelLoop(edges))
+    graft.Confs.withShufflePartitions(edges.sparkSession, 8)(minLabelLoop(f, edges))
   }
 
-  private def minLabelLoop(edges: DataFrame): DataFrame = {
+  private def minLabelLoop(f: Frames, edges: DataFrame): DataFrame = {
     val ss = edges.sparkSession
     import ss.implicits._
     // Symmetric closure once; scanned every round → persist.
-    val sym = edges.select($"src", $"dst")
-      .unionAll(edges.select($"dst".as("src"), $"src".as("dst")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sym = f.persist(edges.select($"src", $"dst")
+      .unionAll(edges.select($"dst".as("src"), $"src".as("dst"))))
     // Lazy checkpoints: each round already runs exactly one action (the
     // labelSum probe), which materializes the round's RDD — an eager
     // checkpoint would pay a SECOND action per round just to force what
     // the probe forces anyway. The logical-plan truncation (the point)
     // happens at wrap time either way.
-    var labels = sym.select($"src".as("node")).distinct()
-      .withColumn("label", $"node")
-      .localCheckpoint(false)
+    var labels = f.checkpoint(sym.select($"src".as("node")).distinct()
+      .withColumn("label", $"node"), eager = false)
     // Convergence probe: per-node labels only ever DECREASE (min-merge),
     // so Σlabel strictly decreases until the fixed point — comparing two
     // longs replaces a per-round anti-join, and the agg is a partial
@@ -123,44 +102,30 @@ object GraphOps {
     val mb = maybeBroadcast(nNodes)
     var converged = nNodes == 0L
     var iters = 0
-    // Frames persisted by the loop that an exception must release: the
-    // current `labels` plus (transiently) the round's `next` before the
-    // swap — otherwise a mid-probe failure pins blocks for the session.
-    var pending: DataFrame = null
-    try {
-      while (!converged) {
-        iters += 1
-        require(iters <= MaxIters,
-          s"connected components did not converge in $MaxIters rounds")
-        // Labels flowing across edges, min-merged with each node's own.
-        // The label frame is NODE-sized (dedup-cluster members / the
-        // projected dimension — MBs even at 100 TB corpora) and a
-        // checkpointed RDD carries no stats, so without the hint every
-        // round plans a sort-merge join of the edge frame against a
-        // dimension — hint it, gated on the node census (maybeBroadcast:
-        // a component graph past the cap shuffles instead).
-        val prop = sym.join(mb(labels), $"dst" === $"node")
-          .select($"src".as("node"), $"label")
-        val next = labels.unionAll(prop)
-          .groupBy($"node").agg(min($"label").as("label"))
-          .localCheckpoint(false)
-        pending = next
-        val curSum = labelSum(next)
-        labels = next
-        pending = null
-        converged = curSum == prevSum
-        prevSum = curSum
-      }
-    } catch {
-      // The iteration-cap (or any mid-round) failure must not leave the
-      // round's frames pinned in the block manager for the session's life.
-      case t: Throwable =>
-        labels.unpersist(blocking = false)
-        if (pending != null) pending.unpersist(blocking = false)
-        sym.unpersist(blocking = false)
-        throw t
+    // An iteration-cap (or any mid-round) failure leaves the round's
+    // frames to `f`, which releases them when its scope exits.
+    while (!converged) {
+      iters += 1
+      require(iters <= MaxIters,
+        s"connected components did not converge in $MaxIters rounds")
+      // Labels flowing across edges, min-merged with each node's own.
+      // The label frame is NODE-sized (dedup-cluster members / the
+      // projected dimension — MBs even at 100 TB corpora) and a
+      // checkpointed RDD carries no stats, so without the hint every
+      // round plans a sort-merge join of the edge frame against a
+      // dimension — hint it, gated on the node census (maybeBroadcast:
+      // a component graph past the cap shuffles instead).
+      val prop = sym.join(mb(labels), $"dst" === $"node")
+        .select($"src".as("node"), $"label")
+      val next = f.checkpoint(labels.unionAll(prop)
+        .groupBy($"node").agg(min($"label").as("label")), eager = false)
+      val curSum = labelSum(next) // materializes next: labels is dead
+      f.release(labels)
+      labels = next
+      converged = curSum == prevSum
+      prevSum = curSum
     }
-    sym.unpersist(blocking = false)
+    f.release(sym)
     labels
   }
 
@@ -173,21 +138,17 @@ object GraphOps {
     * the paired minority keeps every shuffle pair-list-sized. */
   val q59 = QuerySpec(
     "q59_dedup_cluster_resolve",
-    (s, d) => {
+    (s, d) => Frames.scoped { f =>
       import s.implicits._
       val pairs = NearDup.q26.run(s, d)
         .select($"doc_a".as("src"), $"doc_b".as("dst"))
-      val labels = minLabel(pairs)
+      val labels = minLabel(f, pairs)
       val sizes = labels.groupBy($"label").agg(count(lit(1)).as("cluster_size"))
-      val out = labels.join(sizes, "label")
+      // Eager: the result outlives the scope that frees the labels.
+      Eager(labels.join(sizes, "label")
         .select($"node".as("doc_id"), $"label".as("cluster_id"),
           $"cluster_size".cast("int").as("cluster_size"))
-        .orderBy($"doc_id")
-      // Sever the result from the loop's persisted frames: materialize
-      // before unpersist so labels can be freed eagerly.
-      val result = Eager(out)
-      labels.unpersist(blocking = false)
-      result
+        .orderBy($"doc_id"))
     },
     // Assembled via mkString, not stripMargin: the embedded q26 SQL
     // contains || concat operators (stripMargin corrupts lines that
@@ -220,27 +181,24 @@ object GraphOps {
     * clusters). */
   val q94 = QuerySpec(
     "q94_semantic_dedup_keep",
-    (s, d) => {
+    (s, d) => Frames.scoped { f =>
       import s.implicits._
       import graft.functions.VectorOps.{asDouble, normSq}
       val pairs = NearDup.q27.run(s, d)
         .select($"vec_a".as("src"), $"vec_b".as("dst"))
-      val labels = minLabel(pairs)
+      val labels = minLabel(f, pairs)
       val sizes = labels.groupBy($"label").agg(count(lit(1)).as("cluster_size"))
       val energy = graft.Tables.embeddings(s, d)
         .select($"vec_id", normSq(asDouble($"embedding")).as("energy"))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy($"label").orderBy($"energy".desc, $"node")
-      val out = labels.join(sizes, "label")
+      Eager(labels.join(sizes, "label")
         .join(energy, $"node" === $"vec_id")
         .withColumn("rk", row_number().over(w))
         .select($"node".as("vec_id"), $"label".as("cluster_id"),
           $"cluster_size".cast("int").as("cluster_size"),
           ($"rk" === 1).as("kept"))
-        .orderBy($"vec_id")
-      val result = Eager(out)
-      labels.unpersist(blocking = false)
-      result
+        .orderBy($"vec_id"))
     },
     NearDup.q27.oracle.map(cosSql => Seq(
       s"WITH RECURSIVE cand AS (${cosSql.replace("ORDER BY vec_a, vec_b", "")}),",
@@ -298,7 +256,7 @@ object GraphOps {
     * checkpointing to truncate lineage. */
   val q126 = QuerySpec(
     "q126_pagerank",
-    (s, d) => {
+    (s, d) => Frames.scoped { f =>
       import s.implicits._
       val li = graft.Tables.lineitem(s, d).select($"l_orderkey", $"l_suppkey")
       val ord = graft.Tables.orders(s, d).select($"o_orderkey", $"o_custkey")
@@ -315,18 +273,14 @@ object GraphOps {
         .select(($"o_custkey" * 2L).as("cust"),
           ($"l_suppkey" * 2L + 1L).as("supp"))
         .distinct()
-      val edges = pairs.select($"cust".as("src"), $"supp".as("dst"))
-        .unionAll(pairs.select($"supp".as("src"), $"cust".as("dst")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try graft.Confs.withShufflePartitions(s, 16) {
+      val edges = f.persist(pairs.select($"cust".as("src"), $"supp".as("dst"))
+        .unionAll(pairs.select($"supp".as("src"), $"cust".as("dst"))))
+      graft.Confs.withShufflePartitions(s, 16) {
         val deg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
         // One edge frame with degree attached, laid out by dst so every
         // sweep's contribution aggregate reuses this partitioning.
-        val edgesDeg = edges.join(deg, "src")
-          .repartition(16, $"dst")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val nodes = edges.select($"src".as("node")).distinct()
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        val edgesDeg = f.persist(edges.join(deg, "src").repartition(16, $"dst"))
+        val nodes = f.persist(edges.select($"src".as("node")).distinct())
         val n = nodes.count()
         // Rank-frame hint gated on the node census already in hand —
         // maybeBroadcast's cap story (a billion-node rank frame must
@@ -339,28 +293,23 @@ object GraphOps {
         // each persist node still caps lineage at one sweep. (A
         // convergence-probed loop would need the eager count back.)
         val sweeps = Seq.iterate(
-          nodes.withColumn("pr_units", lit(PrUnits / n))
-            .persist(StorageLevel.MEMORY_AND_DISK),
+          f.persist(nodes.withColumn("pr_units", lit(PrUnits / n))),
           PrIters + 1) { pr =>
           val contribs = edgesDeg.join(mb(pr), $"src" === $"node")
             .select($"dst", expr("pr_units DIV deg").as("c"))
             .groupBy($"dst").agg(sum($"c").as("csum"))
-          nodes.join(contribs, $"node" === $"dst", "left")
+          f.persist(nodes.join(contribs, $"node" === $"dst", "left")
             .select($"node",
               (lit(teleportUnits) +
-                expr("(85 * coalesce(csum, 0L)) DIV 100")).as("pr_units"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+                expr("(85 * coalesce(csum, 0L)) DIV 100")).as("pr_units")))
         }
-        val out = sweeps.last
+        Eager(sweeps.last
           .select(concat(
               when(pmod($"node", lit(2)) === 0, lit("c:")).otherwise(lit("s:")),
               expr("node div 2").cast("string")).as("node"),
             $"pr_units")
-          .orderBy($"node")
-        val result = Eager(out)
-        (Seq(edgesDeg, nodes) ++ sweeps).foreach(_.unpersist(blocking = false))
-        result
-      } finally edges.unpersist(blocking = false)
+          .orderBy($"node"))
+      }
     },
     Some(Seq(
       "WITH pairs AS (SELECT DISTINCT 'c:'||o_custkey AS cust, 's:'||l_suppkey AS supp",
@@ -407,28 +356,24 @@ object GraphOps {
     * the q28 rescan anti-pattern. */
   val q148 = QuerySpec(
     "q148_graph_triangles",
-    (s, d) => {
+    (s, d) => Frames.scoped { f =>
       import s.implicits._
       val li = graft.Tables.lineitem(s, d)
         .join(broadcast(graft.Tables.part(s, d)
           .filter($"p_brand" === "Brand#4").select($"p_partkey")),
           $"l_partkey" === $"p_partkey")
         .select($"l_orderkey", $"l_partkey").distinct()
-      val e = li.as("a").join(li.as("b"),
+      val e = f.persist(li.as("a").join(li.as("b"),
           $"a.l_orderkey" === $"b.l_orderkey" && $"a.l_partkey" < $"b.l_partkey")
         .select($"a.l_partkey".as("u"), $"b.l_partkey".as("v"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val nodes = e.select($"u".as("p")).union(e.select($"v")).distinct()
-        val tri = e.as("e1").join(e.as("e2"), $"e1.v" === $"e2.u")
-          .select($"e1.u".as("wu"), $"e2.v".as("ww"))
-          .join(e.as("e3"), $"wu" === $"e3.u" && $"ww" === $"e3.v", "left_semi")
-        val agg = nodes.agg(count(lit(1)).as("n_nodes"))
-          .crossJoin(e.agg(count(lit(1)).as("n_edges")))
-          .crossJoin(tri.agg(count(lit(1)).as("n_triangles")))
-        Eager(agg) // eager: e is unpersisted in finally
-      } finally { e.unpersist(); () }
+        .distinct())
+      val nodes = e.select($"u".as("p")).union(e.select($"v")).distinct()
+      val tri = e.as("e1").join(e.as("e2"), $"e1.v" === $"e2.u")
+        .select($"e1.u".as("wu"), $"e2.v".as("ww"))
+        .join(e.as("e3"), $"wu" === $"e3.u" && $"ww" === $"e3.v", "left_semi")
+      Eager(nodes.agg(count(lit(1)).as("n_nodes"))
+        .crossJoin(e.agg(count(lit(1)).as("n_edges")))
+        .crossJoin(tri.agg(count(lit(1)).as("n_triangles"))))
     },
     Some("""WITH li AS (
            |  SELECT DISTINCT l_orderkey, l_partkey
@@ -465,39 +410,34 @@ object GraphOps {
     * fixed point the oracle's recursive CTE computes. */
   val q226 = QuerySpec(
     "q226_bfs_distances",
-    (s, d) => {
+    (s, d) => Frames.scoped { f =>
       import s.implicits._
-      val e = graft.Tables.lineitem(s, d)
+      val e = f.persist(graft.Tables.lineitem(s, d)
         .filter($"l_orderkey" % 199 === 0)
         .select($"l_orderkey".as("o"), $"l_suppkey".as("sk"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try graft.Confs.withShufflePartitions(s, 8) {
+        .distinct())
+      graft.Confs.withShufflePartitions(s, 8) {
         // Each round's frontier is persisted once; `best` stays a LAZY
         // union of those cached pieces — no re-materialization per
         // round, and the anti join still reads only cached partitions.
-        val seed = Seq((1L, 0L)).toDF("node", "dist")
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        val seed = f.persist(Seq((1L, 0L)).toDF("node", "dist"))
         var rounds = List(seed)
         var frontier = seed
         for (i <- 1 to 4) {
           val best = rounds.reduce(_ unionByName _)
           val hitOrders = e.join(broadcast(frontier), $"node" === $"sk")
             .select($"o").distinct()
-          val nxt = e.join(broadcast(hitOrders), Seq("o"))
+          val nxt = f.persist(e.join(broadcast(hitOrders), Seq("o"))
             .select($"sk".as("node")).distinct()
             .join(broadcast(best), Seq("node"), "left_anti")
-            .select($"node", lit(2L * i).as("dist"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .select($"node", lit(2L * i).as("dist")))
           rounds = nxt :: rounds
           frontier = nxt
         }
-        val out = Eager(rounds.reduce(_ unionByName _).groupBy($"dist")
+        Eager(rounds.reduce(_ unionByName _).groupBy($"dist")
           .agg(count(lit(1)).as("n_nodes"), sum($"node").as("node_checksum"))
           .orderBy($"dist"))
-        rounds.foreach(_.unpersist())
-        out
-      } finally { e.unpersist(); () }
+      }
     },
     Some("""WITH RECURSIVE e AS (
            |  SELECT DISTINCT l_orderkey AS o, l_suppkey AS s FROM lineitem
@@ -532,37 +472,31 @@ object GraphOps {
     * handoffs" constraint. */
   val q304 = QuerySpec(
     "q304_bellman_ford_khop",
-    (s, d) => {
+    (s, d) => Frames.scoped { f =>
       import s.implicits._
       val li = graft.Tables.lineitem(s, d)
         .filter($"l_orderkey" % 199 === 0)
         .select($"l_orderkey".as("o"), $"l_suppkey".as("sk"))
         .distinct()
-      val edges = li.as("a").join(li.as("b"),
+      val edges = f.persist(li.as("a").join(li.as("b"),
           $"a.o" === $"b.o" && $"a.sk" =!= $"b.sk")
         .select($"a.sk".as("u"), $"b.sk".as("v"), (($"a.o" % 20L) + 1L).as("w0"))
-        .groupBy($"u", $"v").agg(min($"w0").as("w"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try graft.Confs.withShufflePartitions(s, 8) {
-        var best = Seq((1L, 0L)).toDF("node", "dist")
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        .groupBy($"u", $"v").agg(min($"w0").as("w")))
+      graft.Confs.withShufflePartitions(s, 8) {
+        var best = f.persist(Seq((1L, 0L)).toDF("node", "dist"))
         var prev: DataFrame = null
         for (_ <- 1 to 4) {
-          val relaxed = edges.join(broadcast(best), $"u" === $"node")
+          val relaxed = f.persist(edges.join(broadcast(best), $"u" === $"node")
             .select($"v".as("node"), ($"dist" + $"w").as("dist"))
             .unionByName(best)
-            .groupBy($"node").agg(min($"dist").as("dist"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .groupBy($"node").agg(min($"dist").as("dist")))
           relaxed.count() // materialize before dropping the parent
-          if (prev != null) prev.unpersist()
+          if (prev != null) f.release(prev)
           prev = best
           best = relaxed
         }
-        val out = Eager(best.orderBy($"node").select($"node", $"dist"))
-        best.unpersist()
-        if (prev != null) prev.unpersist()
-        out
-      } finally { edges.unpersist(); () }
+        Eager(best.orderBy($"node").select($"node", $"dist"))
+      }
     },
     Some("""WITH RECURSIVE li AS (
            |  SELECT DISTINCT l_orderkey AS o, l_suppkey AS sk FROM lineitem
@@ -602,24 +536,22 @@ object GraphOps {
     * rewrite plus the short-circuit brought it to ~3 jobs.) */
   val q310 = QuerySpec(
     "q310_kcore_peel",
-    (s, d) => {
+    (s, d) => Frames.scoped { f =>
       import s.implicits._
       val li = graft.Tables.lineitem(s, d)
         .filter($"l_orderkey" % 199 === 0)
         .select($"l_orderkey".as("o"), $"l_suppkey".as("sk"))
         .distinct()
-      val edges0 = li.as("a").join(li.as("b"),
+      val edges0 = f.persist(li.as("a").join(li.as("b"),
           $"a.o" === $"b.o" && $"a.sk" =!= $"b.sk")
         .select($"a.sk".as("u"), $"b.sk".as("v"))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try graft.Confs.withShufflePartitions(s, 8) {
+        .distinct())
+      graft.Confs.withShufflePartitions(s, 8) {
         // Round-r state: the UNFILTERED degree frame among the round's
         // alive set (deg_r(u) over a_{r-1}×a_{r-1} edges). |a_r| is one
         // filtered count of that frame; the next state is one edge join
         // against the survivors. One count action per round total.
-        var deg = edges0.groupBy($"u").agg(count(lit(1)).as("deg"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        var deg = f.persist(edges0.groupBy($"u").agg(count(lit(1)).as("deg")))
         var nBefore = deg.count() // |a0| = every node with an edge
         val stats = Seq.newBuilder[(Int, Long, Long)]
         var round = 1
@@ -636,21 +568,19 @@ object GraphOps {
             (round + 1 to 6).foreach(r => stats += ((r, nAlive, 0L)))
           } else if (round < 6) {
             val alive = deg.filter($"deg" >= 3).select($"u")
-            val next = edges0
+            val next = f.persist(edges0
               .join(alive.withColumnRenamed("u", "av"), $"v" === $"av")
               .join(alive, Seq("u"), "left_semi")
-              .groupBy($"u").agg(count(lit(1)).as("deg"))
-              .persist(StorageLevel.MEMORY_AND_DISK)
+              .groupBy($"u").agg(count(lit(1)).as("deg")))
             next.count() // materialize before dropping the parent
-            deg.unpersist()
+            f.release(deg)
             deg = next
           }
           round += 1
         }
-        deg.unpersist()
         stats.result().toDF("round", "n_before", "n_removed")
           .orderBy($"round")
-      } finally { edges0.unpersist(); () }
+      }
     },
     Some("""WITH li AS (
            |  SELECT DISTINCT l_orderkey AS o, l_suppkey AS sk FROM lineitem
@@ -713,7 +643,7 @@ object GraphOps {
     * personalized rank (pr desc, node tiebreak). */
   val q378 = QuerySpec(
     "q378_personalized_pagerank",
-    (s, d) => {
+    (s, d) => Frames.scoped { f =>
       import s.implicits._
       val li = graft.Tables.lineitem(s, d).select($"l_orderkey", $"l_suppkey")
       val ord = graft.Tables.orders(s, d).select($"o_orderkey", $"o_custkey")
@@ -724,18 +654,14 @@ object GraphOps {
         .select(($"o_custkey" * 2L).as("cust"),
           ($"l_suppkey" * 2L + 1L).as("supp"))
         .distinct()
-      val edges = pairs.select($"cust".as("src"), $"supp".as("dst"))
-        .unionAll(pairs.select($"supp".as("src"), $"cust".as("dst")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try graft.Confs.withShufflePartitions(s, 16) {
+      val edges = f.persist(pairs.select($"cust".as("src"), $"supp".as("dst"))
+        .unionAll(pairs.select($"supp".as("src"), $"cust".as("dst"))))
+      graft.Confs.withShufflePartitions(s, 16) {
         val deg = edges.groupBy($"src").agg(count(lit(1)).as("deg"))
-        val edgesDeg = edges.join(deg, "src")
-          .repartition(16, $"dst")
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        val edgesDeg = f.persist(edges.join(deg, "src").repartition(16, $"dst"))
         val seedCol = $"node".isin((1 to 10).map(i => 2L * i): _*)
-        val nodes = edges.select($"src".as("node")).distinct()
-          .withColumn("is_seed", seedCol)
-          .persist(StorageLevel.MEMORY_AND_DISK)
+        val nodes = f.persist(edges.select($"src".as("node")).distinct()
+          .withColumn("is_seed", seedCol))
         val nSeeds = nodes.filter($"is_seed").count()
         // Same gated rank-frame hint as q126 — the node frame is
         // persisted, so this census is a cheap second pass over it.
@@ -743,29 +669,24 @@ object GraphOps {
         val seedShare = PrUnits / nSeeds
         val teleportUnits = (15L * seedShare) / 100L
         val sweeps = Seq.iterate(
-          nodes.withColumn("pr_units",
-              when($"is_seed", lit(seedShare)).otherwise(lit(0L)))
-            .persist(StorageLevel.MEMORY_AND_DISK),
+          f.persist(nodes.withColumn("pr_units",
+              when($"is_seed", lit(seedShare)).otherwise(lit(0L)))),
           PrIters + 1) { pr =>
           val contribs = edgesDeg.join(mb(pr), $"src" === $"node")
             .select($"dst", expr("pr_units DIV deg").as("c"))
             .groupBy($"dst").agg(sum($"c").as("csum"))
-          nodes.join(contribs, $"node" === $"dst", "left")
+          f.persist(nodes.join(contribs, $"node" === $"dst", "left")
             .select($"node", $"is_seed",
               (when($"is_seed", lit(teleportUnits)).otherwise(lit(0L)) +
-                expr("(85 * coalesce(csum, 0L)) DIV 100")).as("pr_units"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
+                expr("(85 * coalesce(csum, 0L)) DIV 100")).as("pr_units")))
         }
-        val out = sweeps.last
+        Eager(sweeps.last
           .select(concat(
               when(pmod($"node", lit(2)) === 0, lit("c:")).otherwise(lit("s:")),
               expr("node div 2").cast("string")).as("node"),
             $"pr_units")
-          .orderBy($"pr_units".desc, $"node").limit(20)
-        val result = Eager(out)
-        (Seq(edgesDeg, nodes) ++ sweeps).foreach(_.unpersist(blocking = false))
-        result
-      } finally edges.unpersist(blocking = false)
+          .orderBy($"pr_units".desc, $"node").limit(20))
+      }
     },
     Some(Seq(
       "WITH pairs AS (SELECT DISTINCT 'c:'||o_custkey AS cust, 's:'||l_suppkey AS supp",
@@ -888,36 +809,31 @@ object GraphOps {
   /** q448's pipeline on an already-persisted edge frame, factored so
     * PlanAuditSpec can pin the shape: every per-round join reads the
     * in-memory edges (one fact-fact shuffle EVER, at build), and every
-    * normalizer is a broadcast 1-row frame. */
-  private[graft] def hitsAuthorities(edges: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    hitsAuthoritiesStaged(edges)._1
-
-  /** r13: each normalization stage references its iterate twice (the
+    * normalizer is a broadcast 1-row frame.
+    *
+    * r13: each normalization stage references its iterate twice (the
     * main leg and the 1-row max), and with lazy lineage that recompute
     * COMPOUNDS — a2 evaluates h1n twice, each of which evaluates a1n
     * twice, so a1 was being computed 8× per run (measured 75+ cpu-s on
     * a node-sized frame). The three iterates are supplier/customer-
-    * sized; persist them and hand the caller a release handle (guide
-    * §5 — same bytes, the doubling-per-round goes away). */
-  private[graft] def hitsAuthoritiesStaged(edges: org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, () => Unit) = {
+    * sized; they are persisted in the caller's scope `f` (guide §5 —
+    * same bytes, the doubling-per-round goes away). */
+  private[graft] def hitsAuthorities(f: Frames, edges: DataFrame): DataFrame = {
     import edges.sparkSession.implicits._
     // h0 = 1 for every customer => a1(s) = degree(s).
-    val a1 = edges.groupBy($"supp").agg(count(lit(1)).as("a")).persist()
+    val a1 = f.persist(edges.groupBy($"supp").agg(count(lit(1)).as("a")))
     val a1n = a1.crossJoin(broadcast(a1.agg(max($"a").as("mx"))))
       .select($"supp", expr("a * 1000000L div mx").as("a_ppm"))
-    val h1 = edges.join(a1n, "supp")
-      .groupBy($"cust").agg(sum($"a_ppm").as("h")).persist()
+    val h1 = f.persist(edges.join(a1n, "supp")
+      .groupBy($"cust").agg(sum($"a_ppm").as("h")))
     val h1n = h1.crossJoin(broadcast(h1.agg(max($"h").as("mx"))))
       .select($"cust", expr("h * 1000000L div mx").as("h_ppm"))
-    val a2 = edges.join(h1n, "cust")
-      .groupBy($"supp").agg(sum($"h_ppm").as("a2")).persist()
+    val a2 = f.persist(edges.join(h1n, "cust")
+      .groupBy($"supp").agg(sum($"h_ppm").as("a2")))
     val a2n = a2.crossJoin(broadcast(a2.agg(max($"a2").as("mx"))))
       .select($"supp".as("s_suppkey"),
         expr("a2 * 1000000L div mx").as("authority_ppm"))
-    (a2n.orderBy($"authority_ppm".desc, $"s_suppkey").limit(10),
-      () => Seq(a2, h1, a1).foreach(_.unpersist(blocking = false)))
+    a2n.orderBy($"authority_ppm".desc, $"s_suppkey").limit(10)
   }
 
   /** DISTINCT (cust, supp) trade edges — the shared bipartite graph of
@@ -932,13 +848,23 @@ object GraphOps {
       .distinct()
   }
 
+  /** [[coPurchaseEdges]] over the trade edges, both persisted in `f` —
+    * the input the q476–q506 queries open with. */
+  private def persistedCoPurchase(f: Frames, s: org.apache.spark.sql.SparkSession,
+      d: String): DataFrame =
+    f.persist(coPurchaseEdges(f.persist(tradeEdges(s, d))))
+
+  /** The WEIGHTED projection gw(u, v, sup) — [[basketPairCounts]] at
+    * the support threshold, over the trade edges, both persisted in
+    * `f`: the input of q497 and q504–q509. */
+  private def persistedWeightedCoPurchase(f: Frames,
+      s: org.apache.spark.sql.SparkSession, d: String): DataFrame =
+    f.persist(basketPairCounts(f.persist(tradeEdges(s, d))).filter(col("sup") >= 8))
+
   val q448 = QuerySpec(
     "q448_hits_authorities",
-    (s, d) => {
-      val edges = tradeEdges(s, d).persist(StorageLevel.MEMORY_AND_DISK)
-      val (res, release) = hitsAuthoritiesStaged(edges)
-      try Eager(res)
-      finally { release(); edges.unpersist(blocking = false) }
+    (s, d) => Frames.scoped { f =>
+      Eager(hitsAuthorities(f, f.persist(tradeEdges(s, d))))
     },
     Some("""WITH edges AS (
            |  SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
@@ -1009,10 +935,8 @@ object GraphOps {
 
   val q454 = QuerySpec(
     "q454_itemitem_recommend",
-    (s, d) => {
-      val edges = tradeEdges(s, d).persist(StorageLevel.MEMORY_AND_DISK)
-      try Eager(itemItemRecs(edges))
-      finally edges.unpersist(blocking = false)
+    (s, d) => Frames.scoped { f =>
+      Eager(itemItemRecs(f.persist(tradeEdges(s, d))))
     },
     Some("""WITH edges AS (
            |  SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp
@@ -1141,17 +1065,9 @@ object GraphOps {
     * are orientation-invariant — the oracle's id-ordered SQL is
     * unchanged. Wedges from the degree census (Σ deg·(deg−1)/2),
     * coefficient = 3·triangles/wedges in exact ppm. The degree frame is
-    * node-sized (a dimension) and broadcasts into the orientation. */
-  private[graft] def triangleCensus(g: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = triangleCensusWithHandle(g)._1
-
-  /** [[triangleCensus]] plus the oriented list's checkpoint handle, so
-    * q476 can release the blocks after its Eager readout (r13, ADVICE:
-    * the oriented checkpoint outlived every invocation). The pinnable
-    * lazy plan is unchanged — PlanAuditSpec keeps calling
-    * [[triangleCensus]]. */
-  private[graft] def triangleCensusWithHandle(g: org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    * node-sized (a dimension) and broadcasts into the orientation. The
+    * oriented list's checkpoint belongs to `f`. */
+  private[graft] def triangleCensus(f: Frames, g: DataFrame): DataFrame = {
     import g.sparkSession.implicits._
     // r12: same wedge-stage rewrite as [[edgeSupport]] — the oriented
     // list checkpoints once (three join references used to re-derive
@@ -1166,22 +1082,21 @@ object GraphOps {
       sum(expr("deg * (deg - 1) div 2")).as("n_wedges"))
     val du = struct($"du", $"u")
     val dv = struct($"dv", $"v")
-    val oriented = g
+    val oriented = f.checkpoint(g
       .join(broadcast(deg.select($"n".as("u"), $"deg".as("du"))), Seq("u"))
       .join(broadcast(deg.select($"n".as("v"), $"deg".as("dv"))), Seq("v"))
       .select(when(du < dv, $"u").otherwise($"v").as("lo"),
-        when(du < dv, $"v").otherwise($"u").as("hi"))
-      .localCheckpoint()
+        when(du < dv, $"v").otherwise($"u").as("hi")))
     val tri = oriented.as("e1")
       .join(mb(oriented).as("e2"), $"e1.hi" === $"e2.lo")
       .join(mb(oriented).as("e3"),
         $"e1.lo" === $"e3.lo" && $"e2.hi" === $"e3.hi", "left_semi")
       .agg(count(lit(1)).as("n_triangles"))
     val nEdges = g.agg(count(lit(1)).as("n_edges"))
-    (wedges.crossJoin(broadcast(nEdges)).crossJoin(broadcast(tri))
+    wedges.crossJoin(broadcast(nEdges)).crossJoin(broadcast(tri))
       .select($"n_nodes", $"n_edges", $"n_wedges", $"n_triangles",
         expr("n_triangles * 3000000L div nullif(n_wedges, 0L)")
-          .as("clustering_ppm")), oriented)
+          .as("clustering_ppm"))
   }
 
   /** q476 — triangle census + global clustering coefficient over the
@@ -1192,14 +1107,8 @@ object GraphOps {
     * census, the orientation joins, and the edge count. */
   val q476 = QuerySpec(
     "q476_triangle_census",
-    (s, d) => {
-      val edges = tradeEdges(s, d).persist(StorageLevel.MEMORY_AND_DISK)
-      val g = coPurchaseEdges(edges).persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val (census, oriented) = triangleCensusWithHandle(g)
-        try Eager(census) finally oriented.unpersist(blocking = false)
-      }
-      finally { g.unpersist(blocking = false); edges.unpersist(blocking = false) }
+    (s, d) => Frames.scoped { f =>
+      Eager(triangleCensus(f, persistedCoPurchase(f, s, d)))
     },
     Some(s"""WITH $sqlCoPurchaseCtes,
             |deg AS (SELECT n, count(*) AS deg FROM (
@@ -1237,11 +1146,12 @@ object GraphOps {
     * reached early SHORT-CIRCUITS the remaining rounds — they are
     * no-ops on an identical frame, so the result still equals the
     * oracle's full R-round unroll while skipping their census cost.
-    * Returns the final edge frame and the total removed-node count. */
-  private[graft] def peel3Core(g0: org.apache.spark.sql.DataFrame, rounds: Int)
-      : (org.apache.spark.sql.DataFrame, Long) = {
+    * Returns the final edge frame (held by `f`) and the total
+    * removed-node count. */
+  private[graft] def peel3Core(f: Frames, g0: DataFrame, rounds: Int)
+      : (DataFrame, Long) = {
     import g0.sparkSession.implicits._
-    var g = g0.localCheckpoint()
+    var g = f.checkpoint(g0)
     var removed = 0L
     var fixed = false
     for (_ <- 1 to rounds if !fixed) {
@@ -1256,11 +1166,12 @@ object GraphOps {
       if (r == 0L) fixed = true
       else {
         removed += r
-        g = g
+        val prev = g
+        g = f.checkpoint(g
           .join(keep.select($"n".as("u")), Seq("u"), "left_semi")
           .join(keep.select($"n".as("v")), Seq("v"), "left_semi")
-          .select($"u", $"v")
-          .localCheckpoint()
+          .select($"u", $"v"))
+        f.release(prev)
       }
     }
     (g, removed)
@@ -1268,18 +1179,15 @@ object GraphOps {
 
   val q477 = QuerySpec(
     "q477_kcore_peeling",
-    (s, d) => {
+    (s, d) => Frames.scoped { f =>
       import s.implicits._
-      val edges = tradeEdges(s, d).persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val (g, removed) = peel3Core(coPurchaseEdges(edges), 8)
-        val core = g.select($"u".as("n")).unionAll(g.select($"v".as("n")))
-          .distinct().agg(count(lit(1)).as("core_nodes"))
-        Eager(g.agg(count(lit(1)).as("core_edges"))
-          .crossJoin(broadcast(core))
-          .select($"core_nodes", $"core_edges",
-            lit(removed).as("n_removed")))
-      } finally edges.unpersist(blocking = false)
+      val (g, removed) = peel3Core(f, coPurchaseEdges(f.persist(tradeEdges(s, d))), 8)
+      val core = g.select($"u".as("n")).unionAll(g.select($"v".as("n")))
+        .distinct().agg(count(lit(1)).as("core_nodes"))
+      Eager(g.agg(count(lit(1)).as("core_edges"))
+        .crossJoin(broadcast(core))
+        .select($"core_nodes", $"core_edges",
+          lit(removed).as("n_removed")))
     },
     Some {
       val peel = (1 to 8).map { r =>
@@ -1355,17 +1263,14 @@ object GraphOps {
 
   val q478 = QuerySpec(
     "q478_degree_assortativity",
-    (s, d) => {
-      val edges = tradeEdges(s, d).persist(StorageLevel.MEMORY_AND_DISK)
+    (s, d) => Frames.scoped { f =>
       // The projection is PERSISTED: the plan references it four times
       // (both sides of the bidirected union, each feeding the degree
       // census and the stats join) — unpersisted, each reference
       // re-ran the capped-pair self-join, ~4× the build cost for one
       // projection's worth of answer (the round-8 detail line showed
       // ~120 cpu-s where one build costs ~35).
-      val g = coPurchaseEdges(edges).persist(StorageLevel.MEMORY_AND_DISK)
-      try Eager(assortativityStats(g))
-      finally { g.unpersist(blocking = false); edges.unpersist(blocking = false) }
+      Eager(assortativityStats(persistedCoPurchase(f, s, d)))
     },
     Some(s"""WITH $sqlCoPurchaseCtes,
             |bi AS (SELECT u AS src, v AS dst FROM g
@@ -1392,23 +1297,24 @@ object GraphOps {
     * round's frame is localCheckpoint'ed (the q477 rule — the census
     * and window reference the parent more than once, so an
     * unchecked-pointed loop compounds the logical plan). Returns the
-    * round-`rounds` (node, lbl) frame. */
-  private[graft] def propagateLabels(g: org.apache.spark.sql.DataFrame,
-      rounds: Int): org.apache.spark.sql.DataFrame = {
+    * round-`rounds` (node, lbl) frame, held by `f`. */
+  private[graft] def propagateLabels(f: Frames, g: DataFrame,
+      rounds: Int): DataFrame = {
     import g.sparkSession.implicits._
     import org.apache.spark.sql.expressions.Window
     val bi = g.select($"u".as("src"), $"v".as("dst"))
       .unionAll(g.select($"v".as("src"), $"u".as("dst")))
-    var lbl = bi.select($"dst".as("n")).distinct()
-      .select($"n", $"n".as("lbl")).localCheckpoint()
+    var lbl = f.checkpoint(bi.select($"dst".as("n")).distinct()
+      .select($"n", $"n".as("lbl")))
     val w = Window.partitionBy($"dst").orderBy($"cnt".desc, $"lbl")
     for (_ <- 1 to rounds) {
-      lbl = bi.join(lbl.select($"n".as("src"), $"lbl"), Seq("src"))
+      val prev = lbl
+      lbl = f.checkpoint(bi.join(lbl.select($"n".as("src"), $"lbl"), Seq("src"))
         .groupBy($"dst", $"lbl").agg(count(lit(1)).as("cnt"))
         .withColumn("rn", row_number().over(w))
         .filter($"rn" === 1)
-        .select($"dst".as("n"), $"lbl")
-        .localCheckpoint()
+        .select($"dst".as("n"), $"lbl"))
+      f.release(prev)
     }
     lbl
   }
@@ -1494,12 +1400,10 @@ object GraphOps {
     * DECIMAL(38,0)/HUGEINT exactly as q435 does. */
   val q481 = QuerySpec(
     "q481_label_propagation",
-    (s, d) => {
+    (s, d) => Frames.scoped { f =>
       import s.implicits._
-      val edges = tradeEdges(s, d).persist(StorageLevel.MEMORY_AND_DISK)
-      val g = coPurchaseEdges(edges).persist(StorageLevel.MEMORY_AND_DISK)
-      try modularityCensus(g, propagateLabels(g, 4).select($"n", $"lbl".as("com")))
-      finally { g.unpersist(blocking = false); edges.unpersist(blocking = false) }
+      val g = persistedCoPurchase(f, s, d)
+      modularityCensus(g, propagateLabels(f, g, 4).select($"n", $"lbl".as("com")))
     },
     Some {
       // Each round MATERIALIZED: l_r is referenced by the next census
@@ -1542,39 +1446,38 @@ object GraphOps {
     * argmax(score desc, com asc) IS the Louvain move rule. Each round:
     * one edge-sized join (k_{n,C} census), two node-sized joins (k_n,
     * Σtot), one per-mover argmax window; each round's frame
-    * localCheckpoint'ed (the q477 rule). Returns (n, com). */
-  private[graft] def louvainRounds(g: org.apache.spark.sql.DataFrame,
-      rounds: Int): org.apache.spark.sql.DataFrame =
-    louvainRoundsCounted(g, rounds)._1
+    * localCheckpoint'ed (the q477 rule). Returns (n, com), over a
+    * checkpoint held by `f`. */
+  private[graft] def louvainRounds(f: Frames, g: DataFrame, rounds: Int): DataFrame =
+    louvainRoundsCounted(f, g, rounds)._1
 
   /** [[louvainRounds]] plus the number of sweeps actually EXECUTED,
     * factored so the convergence edge test can assert the fixpoint
     * short-circuit fired (round-11 verdict ask #4: `trussPeel` and
     * `starContractLabels` short-circuit on a result-invariant probe
     * while the Louvain loops always paid their full sweep budget). */
-  private[graft] def louvainRoundsCounted(g: org.apache.spark.sql.DataFrame,
-      rounds: Int): (org.apache.spark.sql.DataFrame, Int) = {
+  private[graft] def louvainRoundsCounted(f: Frames, g: DataFrame,
+      rounds: Int): (DataFrame, Int) = {
     import g.sparkSession.implicits._
     val mVal = g.count()
-    val bi = g.select($"u".as("src"), $"v".as("dst"))
-      .unionAll(g.select($"v".as("src"), $"u".as("dst")))
-      .localCheckpoint()
-    val deg = bi.groupBy($"src".as("n")).agg(count(lit(1)).as("kn"))
-      .localCheckpoint()
+    val bi = f.checkpoint(g.select($"u".as("src"), $"v".as("dst"))
+      .unionAll(g.select($"v".as("src"), $"u".as("dst"))))
+    val deg = f.checkpoint(bi.groupBy($"src".as("n")).agg(count(lit(1)).as("kn")))
     // Node census once (the checkpoint is already materialized, so this
     // count is metadata-cheap) — gates every sweep's side-frame
-    // broadcast below AND sizes the loop's exchange width (r12,
-    // [[loopWidth]]).
+    // broadcast below AND sizes the loop's exchange width (r12): a
+    // label-frame sweep's exchanges carry a few dozen bytes per node,
+    // so the session's scan width would only multiply per-sweep fixed
+    // cost; the shared derived-width rule at the loops' floor of 8.
     val nNodes = deg.count()
     val mb = maybeBroadcast(nNodes)
     val out = graft.Confs.withShufflePartitions(g.sparkSession,
-        loopWidth(g.sparkSession, nNodes)) {
-      louvainLoop(rounds,
-        deg.select($"n", $"n".as("com")).localCheckpoint(),
+        graft.Confs.derivedWidth(g.sparkSession, nNodes, 8)) {
+      louvainLoop(f, rounds,
+        f.checkpoint(deg.select($"n", $"n".as("com"))),
         (com, r) => louvainSweep(bi, deg, com, mVal, r, mb))
     }
-    bi.unpersist(blocking = false)
-    deg.unpersist(blocking = false)
+    f.release(bi, deg)
     out
   }
 
@@ -1596,10 +1499,10 @@ object GraphOps {
     * emptiness scan of a node-sized frame, no join (r12: the sweep
     * knows cur vs next at argmax time, so the old join-against-
     * previous probe job was recomputing information the sweep already
-    * had). Returns (labels as (n, com), sweepsExecuted). */
-  private def louvainLoop(rounds: Int, init: org.apache.spark.sql.DataFrame,
-      sweep: (org.apache.spark.sql.DataFrame, Int) => org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, Int) = {
+    * had). `init` and every round's frame belong to `f`. Returns
+    * (labels as (n, com), sweepsExecuted). */
+  private def louvainLoop(f: Frames, rounds: Int, init: DataFrame,
+      sweep: (DataFrame, Int) => DataFrame): (DataFrame, Int) = {
     import init.sparkSession.implicits._
     var com = init
     var quiet = 0
@@ -1607,7 +1510,7 @@ object GraphOps {
     var r = 1
     while (r <= rounds && quiet < 2) {
       val prev = com
-      com = sweep(prev, r).localCheckpoint()
+      com = f.checkpoint(sweep(prev, r))
       executed += 1
       // Probing the FINAL budgeted sweep buys nothing — skip its job.
       if (r < rounds) {
@@ -1618,7 +1521,7 @@ object GraphOps {
       // starContractLabels cleanup discipline — this loop's frames are
       // node-sized, but a 4M-node label frame × 6 sweeps is real block
       // -manager mass at scale).
-      prev.unpersist(blocking = false)
+      f.release(prev)
       r += 1
     }
     (com.select($"n", $"com"), executed)
@@ -1716,12 +1619,9 @@ object GraphOps {
     * materialized-round SQL unrolling the same 4 sweeps. */
   val q495 = QuerySpec(
     "q495_louvain_ascent",
-    (s, d) => {
-      import s.implicits._
-      val edges = tradeEdges(s, d).persist(StorageLevel.MEMORY_AND_DISK)
-      val g = coPurchaseEdges(edges).persist(StorageLevel.MEMORY_AND_DISK)
-      try modularityCensus(g, louvainRounds(g, 4))
-      finally { g.unpersist(blocking = false); edges.unpersist(blocking = false) }
+    (s, d) => Frames.scoped { f =>
+      val g = persistedCoPurchase(f, s, d)
+      modularityCensus(g, louvainRounds(f, g, 4))
     },
     Some {
       // Each round MATERIALIZED (the q481-oracle lesson); the score is
@@ -1810,39 +1710,36 @@ object GraphOps {
 
   val q497 = QuerySpec(
     "q497_weighted_pagerank",
-    (s, d) => {
+    (s, d) => Frames.scoped { f =>
       import s.implicits._
-      val edges0 = tradeEdges(s, d).persist(StorageLevel.MEMORY_AND_DISK)
-      val g = basketPairCounts(edges0).filter($"sup" >= 8)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try graft.Confs.withShufflePartitions(s, 8) {
-        val bi = g.select($"u".as("src"), $"v".as("dst"), $"sup".as("w"))
-          .unionAll(g.select($"v".as("src"), $"u".as("dst"), $"sup".as("w")))
-          .localCheckpoint()
-        val strength = bi.groupBy($"src".as("n")).agg(sum($"w").as("str"))
-          .localCheckpoint()
+      val g = persistedWeightedCoPurchase(f, s, d)
+      graft.Confs.withShufflePartitions(s, 8) {
+        val bi = f.checkpoint(g.select($"u".as("src"), $"v".as("dst"), $"sup".as("w"))
+          .unionAll(g.select($"v".as("src"), $"u".as("dst"), $"sup".as("w"))))
+        val strength = f.checkpoint(bi.groupBy($"src".as("n")).agg(sum($"w").as("str")))
         // Node census once (checkpoint already materialized) — gates
         // every sweep's rank-frame broadcast.
         val mb = maybeBroadcast(strength.count())
-        val seeds = strength.orderBy($"str".desc, $"n").limit(2)
-          .select($"n", lit(1L).as("is_seed")).localCheckpoint()
+        val seeds = f.checkpoint(strength.orderBy($"str".desc, $"n").limit(2)
+          .select($"n", lit(1L).as("is_seed")))
         val seedUnits = PrUnits / 2L
         // e(v): the personalization vector — all mass on the seeds.
-        val e = strength.select($"n").join(seeds, Seq("n"), "left")
+        val e = f.checkpoint(strength.select($"n").join(seeds, Seq("n"), "left")
           .select($"n",
-            (coalesce($"is_seed", lit(0L)) * lit(seedUnits)).as("e_units"))
-          .localCheckpoint()
-        var pr = e.select($"n", $"e_units".as("pr_units"))
-          .localCheckpoint()
-        val edgesW = bi.join(strength.select($"n".as("src"), $"str"), Seq("src"))
-          .localCheckpoint()
-        for (_ <- 1 to PrIters)
-          pr = pprSweep(edgesW, e, pr, mb).localCheckpoint()
+            (coalesce($"is_seed", lit(0L)) * lit(seedUnits)).as("e_units")))
+        var pr = f.checkpoint(e.select($"n", $"e_units".as("pr_units")))
+        val edgesW = f.checkpoint(
+          bi.join(strength.select($"n".as("src"), $"str"), Seq("src")))
+        for (_ <- 1 to PrIters) {
+          val prev = pr
+          pr = f.checkpoint(pprSweep(edgesW, e, pr, mb))
+          f.release(prev)
+        }
         Eager(pr.join(e.select($"n", ($"e_units" > 0).cast("long").as("is_seed")),
             Seq("n"))
           .orderBy($"pr_units".desc, $"n").limit(15)
           .select($"n".as("node"), $"is_seed", $"pr_units"))
-      } finally { g.unpersist(blocking = false); edges0.unpersist(blocking = false) }
+      }
     },
     Some {
       val sweeps = (1 to 3).map { r =>
@@ -1930,38 +1827,36 @@ object GraphOps {
   /** q504's ascent loop, factored for edge tests: `rounds` weighted
     * parity sweeps over a weighted undirected edge frame `gw(u, v,
     * sup)` — [[louvainRounds]]' discipline with [[louvainSweepWeighted]]
-    * in the sweep seat. Returns (n, com). */
-  private[graft] def louvainRoundsWeighted(gw: org.apache.spark.sql.DataFrame,
-      rounds: Int): org.apache.spark.sql.DataFrame =
-    louvainRoundsWeightedCounted(gw, rounds)._1
+    * in the sweep seat. Returns (n, com), over a checkpoint held by
+    * `f`. */
+  private[graft] def louvainRoundsWeighted(f: Frames, gw: DataFrame,
+      rounds: Int): DataFrame =
+    louvainRoundsWeightedCounted(f, gw, rounds)._1
 
   /** [[louvainRoundsWeighted]] plus the executed-sweep count — the
     * weighted sibling of [[louvainRoundsCounted]], sharing
     * [[louvainLoop]]'s fixpoint short-circuit. */
-  private[graft] def louvainRoundsWeightedCounted(
-      gw: org.apache.spark.sql.DataFrame, rounds: Int)
-      : (org.apache.spark.sql.DataFrame, Int) = {
+  private[graft] def louvainRoundsWeightedCounted(f: Frames, gw: DataFrame,
+      rounds: Int): (DataFrame, Int) = {
     import gw.sparkSession.implicits._
     val wTot = {
       val cell = gw.agg(sum($"sup")).head
       if (cell.isNullAt(0)) 0L else cell.getLong(0)
     }
-    val bi = gw.select($"u".as("src"), $"v".as("dst"), $"sup".as("w"))
-      .unionAll(gw.select($"v".as("src"), $"u".as("dst"), $"sup".as("w")))
-      .localCheckpoint()
-    val str = bi.groupBy($"src".as("n")).agg(sum($"w").as("kn"))
-      .localCheckpoint()
+    val bi = f.checkpoint(gw.select($"u".as("src"), $"v".as("dst"), $"sup".as("w"))
+      .unionAll(gw.select($"v".as("src"), $"u".as("dst"), $"sup".as("w"))))
+    val str = f.checkpoint(bi.groupBy($"src".as("n")).agg(sum($"w").as("kn")))
     val nNodes = str.count()
     val mb = maybeBroadcast(nNodes)
-    // r12: loop exchanges sized to the node census ([[loopWidth]]).
+    // r12: loop exchanges sized to the node census (see
+    // [[louvainRoundsCounted]]).
     val out = graft.Confs.withShufflePartitions(gw.sparkSession,
-        loopWidth(gw.sparkSession, nNodes)) {
-      louvainLoop(rounds,
-        str.select($"n", $"n".as("com")).localCheckpoint(),
+        graft.Confs.derivedWidth(gw.sparkSession, nNodes, 8)) {
+      louvainLoop(f, rounds,
+        f.checkpoint(str.select($"n", $"n".as("com"))),
         (com, r) => louvainSweepWeighted(bi, str, com, wTot, r, mb))
     }
-    bi.unpersist(blocking = false)
-    str.unpersist(blocking = false)
+    f.release(bi, str)
     out
   }
 
@@ -2063,13 +1958,9 @@ object GraphOps {
     * unrolling the same 4 weighted sweeps. */
   val q504 = QuerySpec(
     "q504_louvain_weighted",
-    (s, d) => {
-      import s.implicits._
-      val edges = tradeEdges(s, d).persist(StorageLevel.MEMORY_AND_DISK)
-      val gw = basketPairCounts(edges).filter($"sup" >= 8)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try modularityCensusWeighted(gw, louvainRoundsWeighted(gw, 4))
-      finally { gw.unpersist(blocking = false); edges.unpersist(blocking = false) }
+    (s, d) => Frames.scoped { f =>
+      val gw = persistedWeightedCoPurchase(f, s, d)
+      modularityCensusWeighted(gw, louvainRoundsWeighted(f, gw, 4))
     },
     Some {
       val rounds = (1 to 4).map { r =>
@@ -2141,13 +2032,12 @@ object GraphOps {
       .groupBy($"u", $"v").agg(sum($"sup").as("sup"))
   }
 
-  private[graft] def louvainContract(gw: org.apache.spark.sql.DataFrame,
-      p1: org.apache.spark.sql.DataFrame,
-      mb: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-         org.apache.spark.sql.DataFrame) = {
+  /** The super-graph halves over the fused pass, which is checkpointed
+    * in `f`: (superEdges(u, v, sup), strengths(n, kn)), both lazy. */
+  private[graft] def louvainContract(f: Frames, gw: DataFrame, p1: DataFrame,
+      mb: DataFrame => DataFrame): (DataFrame, DataFrame) = {
     import gw.sparkSession.implicits._
-    val merged = louvainContractMerged(gw, p1, mb).localCheckpoint()
+    val merged = f.checkpoint(louvainContractMerged(gw, p1, mb))
     val e2 = merged.filter($"u" =!= $"v")
     val selfw = merged.filter($"u" === $"v").select($"u".as("n"), $"sup".as("lw"))
     val ext = e2.select($"u".as("n"), $"sup")
@@ -2158,7 +2048,21 @@ object GraphOps {
       .join(selfw, Seq("n"), "left")
       .select($"n",
         (coalesce($"s", lit(0L)) + lit(2L) * coalesce($"lw", lit(0L))).as("kn"))
-    (e2, str2, merged)
+    (e2, str2)
+  }
+
+  /** The level-2 inputs of q507/q509: [[louvainContract]]'s strength
+    * frame and bidirected super-edge frame (src, dst, w), both
+    * checkpointed in `f`. The fused pass under them is dead once both
+    * are materialized, so it lives in a scope of its own. */
+  private def superGraph(f: Frames, gw: DataFrame, p1: DataFrame,
+      mb: DataFrame => DataFrame): (DataFrame, DataFrame) = Frames.scoped { pass =>
+    import gw.sparkSession.implicits._
+    val (e2, str2raw) = louvainContract(pass, gw, p1, mb)
+    val str2 = f.checkpoint(str2raw)
+    val bi2 = f.checkpoint(e2.select($"u".as("src"), $"v".as("dst"), $"sup".as("w"))
+      .unionAll(e2.select($"v".as("src"), $"u".as("dst"), $"sup".as("w"))))
+    (bi2, str2)
   }
 
   /** q507 — TWO-LEVEL hierarchical Louvain over the weighted
@@ -2192,42 +2096,33 @@ object GraphOps {
     * synchronous swap pathology — while dense ranks alternate parity by
     * construction. The rank window is |communities|-sized (a one-task
     * sort of a dimension frame, never corpus-sized) and identical in
-    * the oracle. */
-  private[graft] def louvainTwoLevelLabels(gw: org.apache.spark.sql.DataFrame,
-      l2Rounds: Int): org.apache.spark.sql.DataFrame = {
+    * the oracle. The labels are a checkpoint held by `f`. */
+  private[graft] def louvainTwoLevelLabels(f: Frames, gw: DataFrame,
+      l2Rounds: Int): DataFrame = {
     import gw.sparkSession.implicits._
     import org.apache.spark.sql.expressions.Window
     val wTot = {
       val cell = gw.agg(sum($"sup")).head
       if (cell.isNullAt(0)) 0L else cell.getLong(0)
     }
-    val p1 = louvainRoundsWeighted(gw, 4)
+    val p1 = louvainRoundsWeighted(f, gw, 4)
     val nNodes = p1.count()
     val mb = maybeBroadcast(nNodes)
-    val rt = p1.select($"com".as("c1")).distinct()
-      .withColumn("rk", row_number().over(Window.orderBy($"c1")))
-      .localCheckpoint()
+    val rt = f.checkpoint(p1.select($"com".as("c1")).distinct()
+      .withColumn("rk", row_number().over(Window.orderBy($"c1"))))
     // r13: checkpoint the rank-remapped labels — referenced three times
-    // (both contraction label legs + the compose) — and release the
-    // level-1 ascent's frame, which is dead once p1rk materializes.
-    val p1rk = p1.join(mb(rt), $"com" === $"c1")
-      .select($"n", $"rk".as("com"))
-      .localCheckpoint()
-    p1.unpersist(blocking = false)
-    val (e2, str2raw, merged) = louvainContract(gw, p1rk, mb)
-    val str2 = str2raw.localCheckpoint()
-    val bi2 = e2.select($"u".as("src"), $"v".as("dst"), $"sup".as("w"))
-      .unionAll(e2.select($"v".as("src"), $"u".as("dst"), $"sup".as("w")))
-      .localCheckpoint()
-    merged.unpersist(blocking = false)
+    // (both contraction label legs + the compose).
+    val p1rk = f.checkpoint(p1.join(mb(rt), $"com" === $"c1")
+      .select($"n", $"rk".as("com")))
+    val (bi2, str2) = superGraph(f, gw, p1rk, mb)
     // r12: the level-2 loop runs over |communities|-sized frames —
-    // its exchanges ride the node-census-derived width ([[loopWidth]];
-    // the contraction above keeps the session width, its aggregates
-    // are edge-sized).
+    // its exchanges ride the node-census-derived width (the
+    // contraction above keeps the session width, its aggregates are
+    // edge-sized).
     val (com2, _) = graft.Confs.withShufflePartitions(gw.sparkSession,
-        loopWidth(gw.sparkSession, nNodes)) {
-      louvainLoop(l2Rounds,
-        str2.select($"n", $"n".as("com")).localCheckpoint(),
+        graft.Confs.derivedWidth(gw.sparkSession, nNodes, 8)) {
+      louvainLoop(f, l2Rounds,
+        f.checkpoint(str2.select($"n", $"n".as("com"))),
         (com, r) => louvainSweepWeighted(bi2, str2, com, wTot, r, mb))
     }
     // Compose back: original node → its community's rank → that rank's
@@ -2237,12 +2132,11 @@ object GraphOps {
     // (q507's census legs, q508's audit) walks the label frame at least
     // twice, and each walk used to replay the whole compose chain —
     // and the now-dead intermediates are released eagerly.
-    val composed = p1rk
+    val composed = f.checkpoint(p1rk
       .join(mb(com2.select($"n".as("com"), $"com".as("c2rk"))), Seq("com"))
       .join(mb(rt.select($"rk".as("c2rk"), $"c1".as("com_out"))), Seq("c2rk"))
-      .select($"n", $"com_out".as("com"))
-      .localCheckpoint()
-    Seq(rt, p1rk, str2, bi2, com2).foreach(_.unpersist(blocking = false))
+      .select($"n", $"com_out".as("com")))
+    f.release(rt, p1rk, str2, bi2)
     composed
   }
 
@@ -2335,13 +2229,9 @@ object GraphOps {
 
   val q507 = QuerySpec(
     "q507_louvain_two_level",
-    (s, d) => {
-      import s.implicits._
-      val edges = tradeEdges(s, d).persist(StorageLevel.MEMORY_AND_DISK)
-      val gw = basketPairCounts(edges).filter($"sup" >= 8)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try modularityCensusWeighted(gw, louvainTwoLevelLabels(gw, 2))
-      finally { gw.unpersist(blocking = false); edges.unpersist(blocking = false) }
+    (s, d) => Frames.scoped { f =>
+      val gw = persistedWeightedCoPurchase(f, s, d)
+      modularityCensusWeighted(gw, louvainTwoLevelLabels(f, gw, 2))
     },
     Some(s"""WITH $sqlTwoLevelLabelCtes,
             |${sqlModularityCensusWeighted("composed")}""".stripMargin),
@@ -2390,53 +2280,49 @@ object GraphOps {
     * singleton part). Part ids are component-minimum node ids —
     * unique across communities because components are disjoint node
     * sets, so the refined labeling is deterministic and
-    * oracle-checkable. Returns the checkpointed (n, part, com). */
-  private[graft] def splitByComponents(gw: org.apache.spark.sql.DataFrame,
-      lbl: org.apache.spark.sql.DataFrame,
-      mb: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
-      nodeBound: Long = -1L)
-      : org.apache.spark.sql.DataFrame =
-    splitByComponentsFrom(lbl, intraEdges(gw, lbl, mb), nodeBound)
+    * oracle-checkable. Returns (n, part, com), checkpointed in `f`. */
+  private[graft] def splitByComponents(f: Frames, gw: DataFrame, lbl: DataFrame,
+      mb: DataFrame => DataFrame, nodeBound: Long = -1L): DataFrame =
+    splitByComponentsFrom(f, lbl, intraEdges(gw, lbl, mb), nodeBound)
 
   /** The refinement half of [[splitByComponents]] over an ALREADY
     * carved intra-community edge frame — factored (r13) for q508's
     * shared labeled pass. `nodeBound` ≥ 0 = the caller's label count,
     * an upper bound on the intra-subgraph's nodes (see
     * [[starContractLabels]]). */
-  private[graft] def splitByComponentsFrom(lbl: org.apache.spark.sql.DataFrame,
-      intra: org.apache.spark.sql.DataFrame,
-      nodeBound: Long = -1L): org.apache.spark.sql.DataFrame = {
+  private[graft] def splitByComponentsFrom(f: Frames, lbl: DataFrame,
+      intra: DataFrame, nodeBound: Long = -1L): DataFrame = {
     import lbl.sparkSession.implicits._
-    val comps = starContractLabels(intra, nodeBound)
-    val refined = lbl
+    val comps = starContractLabels(f, intra, nodeBound)
+    val refined = f.checkpoint(lbl
       .join(comps.select($"node".as("n"), $"label"), Seq("n"), "left")
-      .select($"n", coalesce($"label", $"n").as("part"), $"com")
-      .localCheckpoint()
-    comps.unpersist(blocking = false)
+      .select($"n", coalesce($"label", $"n").as("part"), $"com"))
+    f.release(comps)
     refined
   }
 
-  private[graft] def louvainConnectivityAudit(gw: org.apache.spark.sql.DataFrame,
-      labels: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  /** q508's audit readout — Eager'd, so its frames live in a scope of
+    * its own. */
+  private[graft] def louvainConnectivityAudit(gw: DataFrame,
+      labels: DataFrame): DataFrame = Frames.scoped { f =>
     import gw.sparkSession.implicits._
-    val lbl = labels.localCheckpoint()
+    val lbl = f.checkpoint(labels)
     val nLbl = lbl.count()
     val mb = maybeBroadcast(nLbl)
     // r13 (guide §2.4): ONE labeled-edge pass feeds both the
     // intra-community carve and the original-partition census — they
     // used to attach the same labels to the same edge frame twice. The
     // carve is the cu = cv slice; the census consumes (cu, cv, sup).
-    val ge = gw
+    val ge = f.checkpoint(gw
       .join(mb(lbl.select($"n".as("u"), $"com".as("cu"))), Seq("u"))
       .join(mb(lbl.select($"n".as("v"), $"com".as("cv"))), Seq("v"))
-      .select($"u", $"v", $"sup", $"cu", $"cv")
-      .localCheckpoint()
-    val refined = splitByComponentsFrom(lbl,
+      .select($"u", $"v", $"sup", $"cu", $"cv"))
+    val refined = splitByComponentsFrom(f, lbl,
       ge.filter($"cu" === $"cv").select($"u", $"v"), nLbl)
     val cenO = modularityCensusWeightedFromGe(gw, lbl.select($"n", $"com"),
       ge.select($"cu", $"cv", $"sup"))
     val cenR = modularityCensusWeighted(gw, refined.select($"n", $"part".as("com")))
-    ge.unpersist(blocking = false)
+    f.release(ge)
     val perPart = refined.select($"com", $"part").distinct()
       .join(cenR.filter($"com" =!= -1L)
         .select($"com".as("part"), $"n_members".as("psz"),
@@ -2452,16 +2338,13 @@ object GraphOps {
       .filter($"n_parts" > 1)
       .select($"com", $"n_members", $"n_parts", $"largest_part",
         ($"cref" - $"corig").as("q_gain_ppm"))
-    val out = Eager(split.unionAll(split.agg(
+    Eager(split.unionAll(split.agg(
         lit(-1L).as("com"),
         coalesce(sum($"n_members"), lit(0L)).as("n_members"),
         coalesce(sum($"n_parts"), lit(0L)).as("n_parts"),
         count(lit(1)).as("largest_part"),
         coalesce(sum($"q_gain_ppm"), lit(0L)).as("q_gain_ppm")))
       .orderBy($"com"))
-    lbl.unpersist(blocking = false)
-    refined.unpersist(blocking = false)
-    out
   }
 
   /** q508 — CONNECTIVITY audit of the two-level Louvain partition (the
@@ -2479,13 +2362,9 @@ object GraphOps {
     * refinement and the same integer census algebra. */
   val q508 = QuerySpec(
     "q508_louvain_connectivity_audit",
-    (s, d) => {
-      import s.implicits._
-      val edges = tradeEdges(s, d).persist(StorageLevel.MEMORY_AND_DISK)
-      val gw = basketPairCounts(edges).filter($"sup" >= 8)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try louvainConnectivityAudit(gw, louvainTwoLevelLabels(gw, 2))
-      finally { gw.unpersist(blocking = false); edges.unpersist(blocking = false) }
+    (s, d) => Frames.scoped { f =>
+      val gw = persistedWeightedCoPurchase(f, s, d)
+      louvainConnectivityAudit(gw, louvainTwoLevelLabels(f, gw, 2))
     },
     Some(s"""WITH RECURSIVE $sqlTwoLevelLabelCtes,
             |intra AS MATERIALIZED (SELECT gw.u, gw.v FROM gw
@@ -2561,56 +2440,45 @@ object GraphOps {
     * constrained merge), and the hierarchy is two levels. Scale: q507's
     * loop discipline plus two O(log² n) component passes over
     * intra-community edges — every stage edge-sized or
-    * |communities|-sized, labels through the gated broadcast. */
-  private[graft] def leidenTwoLevelLabels(gw: org.apache.spark.sql.DataFrame,
-      l2Rounds: Int): org.apache.spark.sql.DataFrame = {
+    * |communities|-sized, labels through the gated broadcast. Returns
+    * (n, com) over a checkpoint held by `f`. */
+  private[graft] def leidenTwoLevelLabels(f: Frames, gw: DataFrame,
+      l2Rounds: Int): DataFrame = {
     import gw.sparkSession.implicits._
     import org.apache.spark.sql.expressions.Window
     val wTot = {
       val cell = gw.agg(sum($"sup")).head
       if (cell.isNullAt(0)) 0L else cell.getLong(0)
     }
-    val p1 = louvainRoundsWeighted(gw, 4)
+    val p1 = louvainRoundsWeighted(f, gw, 4)
     val nNodes = p1.count()
     val mb = maybeBroadcast(nNodes)
-    val r1 = splitByComponents(gw, p1, mb, nNodes)
-    p1.unpersist(blocking = false)
-    val rt = r1.select($"part".as("c1")).distinct()
-      .withColumn("rk", row_number().over(Window.orderBy($"c1")))
-      .localCheckpoint()
+    val r1 = splitByComponents(f, gw, p1, mb, nNodes)
+    val rt = f.checkpoint(r1.select($"part".as("c1")).distinct()
+      .withColumn("rk", row_number().over(Window.orderBy($"c1"))))
     // r13: checkpoint the rank-remapped labels (three references — see
     // [[louvainTwoLevelLabels]]) and release the refine₁ frame.
-    val p1rk = r1.join(mb(rt), $"part" === $"c1")
-      .select($"n", $"rk".as("com"))
-      .localCheckpoint()
-    Seq(r1, rt).foreach(_.unpersist(blocking = false))
-    val (e2, str2raw, merged) = louvainContract(gw, p1rk, mb)
-    val str2 = str2raw.localCheckpoint()
-    val bi2 = e2.select($"u".as("src"), $"v".as("dst"), $"sup".as("w"))
-      .unionAll(e2.select($"v".as("src"), $"u".as("dst"), $"sup".as("w")))
-      .localCheckpoint()
-    merged.unpersist(blocking = false)
+    val p1rk = f.checkpoint(r1.join(mb(rt), $"part" === $"c1")
+      .select($"n", $"rk".as("com")))
+    f.release(r1, rt)
+    val (bi2, str2) = superGraph(f, gw, p1rk, mb)
     // r12: level-2 loop at the node-census-derived exchange width
     // (see [[louvainTwoLevelLabels]]).
     val (com2, _) = graft.Confs.withShufflePartitions(gw.sparkSession,
-        loopWidth(gw.sparkSession, nNodes)) {
-      louvainLoop(l2Rounds,
-        str2.select($"n", $"n".as("com")).localCheckpoint(),
+        graft.Confs.derivedWidth(gw.sparkSession, nNodes, 8)) {
+      louvainLoop(f, l2Rounds,
+        f.checkpoint(str2.select($"n", $"n".as("com"))),
         (com, r) => louvainSweepWeighted(bi2, str2, com, wTot, r, mb))
     }
     // r13: checkpoint the composed labels before the terminal
     // refinement — splitByComponents walks its label frame three times
     // (intra-edge carve + the left-join back), and each walk used to
     // replay the compose chain.
-    val composed = p1rk
+    val composed = f.checkpoint(p1rk
       .join(mb(com2.select($"n".as("com"), $"com".as("c2"))), Seq("com"))
-      .select($"n", $"c2".as("com"))
-      .localCheckpoint()
-    Seq(p1rk, str2, bi2, com2).foreach(_.unpersist(blocking = false))
-    val out = splitByComponents(gw, composed, mb, nNodes)
-      .select($"n", $"part".as("com"))
-    composed.unpersist(blocking = false)
-    out
+      .select($"n", $"c2".as("com")))
+    f.release(p1rk, str2, bi2)
+    splitByComponents(f, gw, composed, mb, nNodes).select($"n", $"part".as("com"))
   }
 
   /** q509 — LEIDEN two-level community detection over the weighted
@@ -2627,13 +2495,9 @@ object GraphOps {
     * recursive-closure refinement CTEs spliced in at both seams. */
   val q509 = QuerySpec(
     "q509_leiden_two_level",
-    (s, d) => {
-      import s.implicits._
-      val edges = tradeEdges(s, d).persist(StorageLevel.MEMORY_AND_DISK)
-      val gw = basketPairCounts(edges).filter($"sup" >= 8)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try modularityCensusWeighted(gw, leidenTwoLevelLabels(gw, 2))
-      finally { gw.unpersist(blocking = false); edges.unpersist(blocking = false) }
+    (s, d) => Frames.scoped { f =>
+      val gw = persistedWeightedCoPurchase(f, s, d)
+      modularityCensusWeighted(gw, leidenTwoLevelLabels(f, gw, 2))
     },
     Some(s"""WITH RECURSIVE $sqlCoPurchaseWeightedCtes,
             |bi AS MATERIALIZED (SELECT u AS src, v AS dst, sup AS w FROM gw
@@ -2685,17 +2549,15 @@ object GraphOps {
     * — minLabel's doc names the large-star/small-star switch. */
   /** q485's pipeline over an already-persisted projection, factored
     * for edge tests: minLabel components + per-component node/edge
-    * census. Releases the label frame before returning. */
-  private[graft] def componentCensus(g: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    componentCensusFrom(g, minLabel(g.select(
-      g("u").as("src"), g("v").as("dst"))))
+    * census, Eager'd, so the labels live in a scope of their own. */
+  private[graft] def componentCensus(g: DataFrame): DataFrame = Frames.scoped { f =>
+    componentCensusFrom(g, minLabel(f, g.select(g("u").as("src"), g("v").as("dst"))))
+  }
 
   /** The census half of [[componentCensus]], factored so q506 can feed
     * it star-contraction labels: one row per component (id = the label,
-    * node and edge census). Releases the label frame before returning. */
-  private[graft] def componentCensusFrom(g: org.apache.spark.sql.DataFrame,
-      labels: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    * node and edge census), Eager'd. */
+  private[graft] def componentCensusFrom(g: DataFrame, labels: DataFrame): DataFrame = {
     import g.sparkSession.implicits._
     val nodes = labels.groupBy($"label".as("component_id"))
       .agg(count(lit(1)).as("n_nodes"))
@@ -2704,20 +2566,13 @@ object GraphOps {
     val edgesC = g
       .join(labels.select($"node".as("u"), $"label".as("component_id")), Seq("u"))
       .groupBy($"component_id").agg(count(lit(1)).as("n_edges"))
-    val out = Eager(nodes.join(edgesC, Seq("component_id"))
-      .orderBy($"component_id"))
-    labels.unpersist(blocking = false)
-    out
+    Eager(nodes.join(edgesC, Seq("component_id")).orderBy($"component_id"))
   }
 
   val q485 = QuerySpec(
     "q485_copurchase_components",
-    (s, d) => {
-      import s.implicits._
-      val edges = tradeEdges(s, d).persist(StorageLevel.MEMORY_AND_DISK)
-      val g = coPurchaseEdges(edges).persist(StorageLevel.MEMORY_AND_DISK)
-      try Eager(componentCensus(g))
-      finally { g.unpersist(blocking = false); edges.unpersist(blocking = false) }
+    (s, d) => Frames.scoped { f =>
+      Eager(componentCensus(persistedCoPurchase(f, s, d)))
     },
     Some(s"""WITH RECURSIVE $sqlCoPurchaseCtes,
             |bi AS (SELECT u AS a, v AS b FROM g UNION ALL SELECT v, u FROM g),
@@ -2789,28 +2644,27 @@ object GraphOps {
     * large+small pair, which is exact because neither operation can
     * INCREASE any single edge's endpoint sum — an unchanged total
     * forces the multiset unchanged. Input: undirected self-loop-free
-    * edges (u, v); output (node, label). */
-  private[graft] def starContractLabels(edges: org.apache.spark.sql.DataFrame,
-      nodeBound: Long = -1L)
-      : org.apache.spark.sql.DataFrame = {
+    * edges (u, v); output (node, label), a checkpoint held by `f`. */
+  private[graft] def starContractLabels(f: Frames, edges: DataFrame,
+      nodeBound: Long = -1L): DataFrame = {
     val ss = edges.sparkSession
     import ss.implicits._
     // r13: the canonicalizing distinct runs at the SESSION width (it is
     // edge-sized — the one frame here that can be corpus-scale), and the
-    // contraction loop below runs at the node-census-derived
-    // [[loopWidth]] instead of a pinned 8: identical locally (the
-    // census picks the floor), cluster-wide on a billion-node graph.
+    // contraction loop below runs at the node-census-derived width
+    // (floor 8) instead of a pinned 8: identical locally (the census
+    // picks the floor), cluster-wide on a billion-node graph.
     // A caller that already holds an UPPER BOUND on the node count
     // (q508/q509's refinement label census) passes it to skip the
     // distinct+count job; a bound only ever widens the loop or turns a
     // would-be broadcast into a shuffle — both scale-safe directions.
-    val e0 = edges.filter($"u" =!= $"v")
+    val e0 = f.checkpoint(edges.filter($"u" =!= $"v")
       .select(greatest($"u", $"v").as("u"), least($"u", $"v").as("v"))
-      .distinct().localCheckpoint(false)
+      .distinct(), eager = false)
     val nNodes =
       if (nodeBound >= 0L) nodeBound
       else e0.select($"u").unionAll(e0.select($"v")).distinct().count()
-    graft.Confs.withShufflePartitions(ss, loopWidth(ss, nNodes)) {
+    graft.Confs.withShufflePartitions(ss, graft.Confs.derivedWidth(ss, nNodes, 8)) {
       var e = e0
       def probe(df: org.apache.spark.sql.DataFrame): (Long, Long, Long) = {
         val r = df.agg(count(lit(1)), sum($"u"), sum($"v")).head
@@ -2822,37 +2676,27 @@ object GraphOps {
       var prev = probe(e)
       var iters = 0
       var converged = prev._1 == 0L
-      var pending: org.apache.spark.sql.DataFrame = null
-      try {
-        while (!converged) {
-          iters += 1
-          require(iters <= MaxIters,
-            s"star contraction did not converge in $MaxIters rounds")
-          val next = smallStar(largeStar(e, mb), mb).localCheckpoint(false)
-          pending = next
-          val cur = probe(next)
-          e.unpersist(blocking = false)
-          e = next
-          pending = null
-          converged = cur == prev
-          prev = cur
-        }
-      } catch {
-        case t: Throwable =>
-          e.unpersist(blocking = false)
-          if (pending != null) pending.unpersist(blocking = false)
-          throw t
+      // A failed round leaves its frames to `f`'s scope exit.
+      while (!converged) {
+        iters += 1
+        require(iters <= MaxIters,
+          s"star contraction did not converge in $MaxIters rounds")
+        val next = f.checkpoint(smallStar(largeStar(e, mb), mb), eager = false)
+        val cur = probe(next) // materializes next: e is dead
+        f.release(e)
+        e = next
+        converged = cur == prev
+        prev = cur
       }
       // At the fixed point the frame is a star forest: every edge points
       // a node at its component minimum; roots label themselves.
-      val out = e.select($"u".as("node"), $"v".as("label"))
+      val out = f.checkpoint(e.select($"u".as("node"), $"v".as("label"))
         .unionByName(e.select($"v".as("node"), $"v".as("label")))
-        .distinct()
-        .localCheckpoint()
+        .distinct())
       // The labels checkpoint above is eager, so the fixed-point edge
       // frame is no longer needed — release it like every superseded
       // round's frame (the loop's own cleanup discipline).
-      e.unpersist(blocking = false)
+      f.release(e)
       out
     }
   }
@@ -2868,12 +2712,9 @@ object GraphOps {
     * transitive-closure CTE. */
   val q506 = QuerySpec(
     "q506_components_star_contraction",
-    (s, d) => {
-      import s.implicits._
-      val edges = tradeEdges(s, d).persist(StorageLevel.MEMORY_AND_DISK)
-      val g = coPurchaseEdges(edges).persist(StorageLevel.MEMORY_AND_DISK)
-      try Eager(componentCensusFrom(g, starContractLabels(g)))
-      finally { g.unpersist(blocking = false); edges.unpersist(blocking = false) }
+    (s, d) => Frames.scoped { f =>
+      val g = persistedCoPurchase(f, s, d)
+      Eager(componentCensusFrom(g, starContractLabels(f, g)))
     },
     Some(s"""WITH RECURSIVE $sqlCoPurchaseCtes,
             |bi AS (SELECT u AS a, v AS b FROM g UNION ALL SELECT v, u FROM g),
@@ -2905,47 +2746,32 @@ object GraphOps {
     * endpoints have no OTHER neighbors: Jaccard undefined, NULL). */
   /** q486's pipeline over an already-persisted projection, factored
     * for edge tests (isolated edge → NULL, bridge → 0, triangle edge
-    * → 10⁶). */
-  private[graft] def commonNeighborStrength(g: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = commonNeighborStrengthStaged(g)._1
-
-  /** [[commonNeighborStrength]] plus the oriented list's checkpoint
-    * handle (r13, ADVICE): q486 Eagers the 20-row readout and releases
-    * the handle; the pinnable LAZY plan is unchanged. */
-  private[graft] def commonNeighborStrengthStaged(
-      g: org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    * → 10⁶). The LAZY readout reads [[edgeSupport]]'s oriented list,
+    * checkpointed in `f`. */
+  private[graft] def commonNeighborStrength(f: Frames, g: DataFrame): DataFrame = {
     import g.sparkSession.implicits._
     val deg = g.select($"u".as("n")).unionAll(g.select($"v".as("n")))
       .groupBy($"n").agg(count(lit(1)).as("deg"))
-    val (es, or) = edgeSupportWithHandle(g)
-    (es
+    edgeSupport(f, g)
       .join(broadcast(deg.select($"n".as("u"), $"deg".as("du"))), Seq("u"))
       .join(broadcast(deg.select($"n".as("v"), $"deg".as("dv"))), Seq("v"))
       .select($"u", $"v", $"cn", $"du", $"dv",
         expr("cn * 1000000L div nullif(du + dv - 2 - cn, 0L)")
           .as("jaccard_ppm"))
       .orderBy($"jaccard_ppm".desc_nulls_last, $"u", $"v")
-      .limit(20), or)
+      .limit(20)
   }
 
   /** The per-edge triangle-support frame shared by q486 (readout) and
     * q487 (peeling): (u, v, cn) for EVERY edge of `g`, cn = common
     * neighbors = triangles through the edge, 0-filled for edges in no
     * triangle. Edge⋈adjacency fan re-capped by a semi-join — never a
-    * neighborhood×neighborhood cross. */
-  private[graft] def edgeSupport(g: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = edgeSupportWithHandle(g)._1
-
-  /** [[edgeSupport]] plus the oriented list's checkpoint handle, so
-    * callers can release the blocks once the support frame is
-    * materialized (r13, ADVICE — the oriented checkpoint outlived every
-    * invocation). The support frame itself stays LAZY: q486 pipelines
-    * it straight into its top-20 readout (an extra materialization was
-    * measured as a ~3% loss) and q487's peel loop checkpoints it
-    * itself. */
-  private[graft] def edgeSupportWithHandle(g: org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
+    * neighborhood×neighborhood cross. The oriented list is
+    * checkpointed in `f`; the support frame itself stays LAZY: q486
+    * pipelines it straight into its top-20 readout (an extra
+    * materialization was measured as a ~3% loss) and q487's peel loop
+    * checkpoints it itself. */
+  private[graft] def edgeSupport(f: Frames, g: DataFrame): DataFrame = {
     import g.sparkSession.implicits._
     // Degree-ordered triangle ENUMERATION (q476's orientation with the
     // triple kept): each triangle is found once as its unique oriented
@@ -2968,12 +2794,11 @@ object GraphOps {
       .groupBy($"n").agg(count(lit(1)).as("deg"))
     val du = struct($"du", $"u")
     val dv = struct($"dv", $"v")
-    val or = g
+    val or = f.checkpoint(g
       .join(broadcast(deg.select($"n".as("u"), $"deg".as("du"))), Seq("u"))
       .join(broadcast(deg.select($"n".as("v"), $"deg".as("dv"))), Seq("v"))
       .select(when(du < dv, $"u").otherwise($"v").as("lo"),
-        when(du < dv, $"v").otherwise($"u").as("hi"))
-      .localCheckpoint()
+        when(du < dv, $"v").otherwise($"u").as("hi")))
     val tri = or.as("e1")
       .join(mb(or.select($"lo".as("hi"), $"hi".as("z"))).as("e2"), Seq("hi"))
       .select($"lo".as("x"), $"hi".as("y"), $"z")
@@ -2984,7 +2809,7 @@ object GraphOps {
         struct(least($"x", $"z").as("u"), greatest($"x", $"z").as("v")))).as("e"))
       .select($"e.u", $"e.v")
       .groupBy($"u", $"v").agg(count(lit(1)).as("cn"))
-    (g.join(cn, Seq("u", "v"), "left").na.fill(0L, Seq("cn")), or)
+    g.join(cn, Seq("u", "v"), "left").na.fill(0L, Seq("cn"))
   }
 
   /** q487's peel loop, factored for edge tests: exactly `rounds`
@@ -3003,16 +2828,14 @@ object GraphOps {
     * up to 4 full enumerations for rounds that touch <1% of edges,
     * and at 100 TB the gap is the whole job. Every round's support
     * frame is localCheckpoint'ed (three self-references per round;
-    * the q477 lineage rule). */
-  private[graft] def trussPeel(g0: org.apache.spark.sql.DataFrame, rounds: Int)
-      : (org.apache.spark.sql.DataFrame, Long) = {
+    * the q477 lineage rule). The surviving frame is held by `f`. */
+  private[graft] def trussPeel(f: Frames, g0: DataFrame, rounds: Int)
+      : (DataFrame, Long) = {
     import g0.sparkSession.implicits._
-    val g = g0.localCheckpoint()
-    val (sup0, or) = edgeSupportWithHandle(g)
-    var sup = sup0.localCheckpoint()
+    val g = f.checkpoint(g0)
     // r13 (ADVICE): the enumeration's oriented list is dead once the
-    // support frame is checkpointed.
-    or.unpersist(blocking = false)
+    // support frame is checkpointed, so it lives in a scope of its own.
+    var sup = Frames.scoped(enumeration => f.checkpoint(edgeSupport(enumeration, g)))
     var removed = 0L
     var fixed = false
     for (_ <- 1 to rounds if !fixed) {
@@ -3061,11 +2884,10 @@ object GraphOps {
           .select($"e.u", $"e.v")
           .groupBy($"u", $"v").agg(count(lit(1)).as("dec"))
         val prevSup = sup
-        sup = sup.filter($"cn" >= 2)
+        sup = f.checkpoint(sup.filter($"cn" >= 2)
           .join(mbv(dec), Seq("u", "v"), "left")
-          .select($"u", $"v", ($"cn" - coalesce($"dec", lit(0L))).as("cn"))
-          .localCheckpoint()
-        prevSup.unpersist(blocking = false)
+          .select($"u", $"v", ($"cn" - coalesce($"dec", lit(0L))).as("cn")))
+        f.release(prevSup)
       }
     }
     (sup.select($"u", $"v"), removed)
@@ -3086,18 +2908,15 @@ object GraphOps {
     * same unique fixed point. */
   val q487 = QuerySpec(
     "q487_ktruss_peeling",
-    (s, d) => {
+    (s, d) => Frames.scoped { f =>
       import s.implicits._
-      val edges = tradeEdges(s, d).persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val (g, removed) = trussPeel(coPurchaseEdges(edges), 4)
-        val core = g.select($"u".as("n")).unionAll(g.select($"v".as("n")))
-          .distinct().agg(count(lit(1)).as("core_nodes"))
-        Eager(g.agg(count(lit(1)).as("core_edges"))
-          .crossJoin(broadcast(core))
-          .select($"core_nodes", $"core_edges",
-            lit(removed).as("n_removed")))
-      } finally edges.unpersist(blocking = false)
+      val (g, removed) = trussPeel(f, coPurchaseEdges(f.persist(tradeEdges(s, d))), 4)
+      val core = g.select($"u".as("n")).unionAll(g.select($"v".as("n")))
+        .distinct().agg(count(lit(1)).as("core_nodes"))
+      Eager(g.agg(count(lit(1)).as("core_edges"))
+        .crossJoin(broadcast(core))
+        .select($"core_nodes", $"core_edges",
+          lit(removed).as("n_removed")))
     },
     Some {
       val peel = (1 to 4).map { r =>
@@ -3127,15 +2946,8 @@ object GraphOps {
 
   val q486 = QuerySpec(
     "q486_common_neighbor_strength",
-    (s, d) => {
-      import s.implicits._
-      val edges = tradeEdges(s, d).persist(StorageLevel.MEMORY_AND_DISK)
-      val g = coPurchaseEdges(edges).persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val (out, or) = commonNeighborStrengthStaged(g)
-        try Eager(out) finally or.unpersist(blocking = false)
-      }
-      finally { g.unpersist(blocking = false); edges.unpersist(blocking = false) }
+    (s, d) => Frames.scoped { f =>
+      Eager(commonNeighborStrength(f, persistedCoPurchase(f, s, d)))
     },
     Some(s"""WITH $sqlCoPurchaseCtes,
             |bi AS (SELECT u AS src, v AS dst FROM g UNION ALL SELECT v, u FROM g),
@@ -3172,7 +2984,7 @@ object GraphOps {
     * volume; the merge is one aggregate over v1 ∪ deltas. */
   val q489 = QuerySpec(
     "q489_incremental_projection",
-    (s, d) => {
+    (s, d) => Frames.scoped { f =>
       import s.implicits._
       val li = graft.Tables.lineitem(s, d).select($"l_orderkey", $"l_suppkey")
       val ord = graft.Tables.orders(s, d)
@@ -3183,68 +2995,62 @@ object GraphOps {
       val o0 = ord.filter($"o_orderdate" < "2001-01-01")
       val o1 = ord.filter($"o_orderdate" >= "2001-01-01")
       // v1: the maintained epoch-0 artifact.
-      val v1 = basketPairCounts(edgesOf(o0.select($"o_orderkey", $"o_custkey")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val affected = o1.select($"o_custkey".as("cust")).distinct()
-        val e0A = edgesOf(o0.select($"o_orderkey", $"o_custkey"))
-          .join(affected, Seq("cust"), "left_semi")
-        val e1 = edgesOf(o1.select($"o_orderkey", $"o_custkey"))
-        // r12 (guide §2.3/§2.4): the delta used to run basketPairCounts
-        // TWICE over overlapping edge sets — once over e0A (negative
-        // pass) and once over e0A ∪ e1 (positive pass, with e0A
-        // recomputed under it and an extra distinct) — ~6 exchanges.
-        // An affected customer's OLD basket and FULL basket come out of
-        // ONE tagged pass instead: dedup (cust, supp) across epochs
-        // keeping the is-epoch-0 flag, then per customer the bounded
-        // 16-smallest baskets ([[graft.functions.BottomKLongAgg]] — the
-        // basketPairCounts cap discipline; the old side rides a
-        // Long.MaxValue sentinel for non-epoch-0 rows, stripped after,
-        // so one aggregate caps both lists) and the in-row ±pair emit.
-        // k-smallest-by-supp ≡ the rn <= 16 cap, so +pairs(full₁₆)
-        // −pairs(old₁₆) sums to exactly what the two projection passes
-        // computed, support by support.
-        def pairsArr(a: String, d: Long) = expr(
-          s"""CASE WHEN size($a) >= 2 THEN
-             |  flatten(transform(sequence(0, size($a)-2),
-             |    i -> transform(sequence(i+1, size($a)-1),
-             |      j -> struct($a[i] AS u, $a[j] AS v, ${d}L AS d))))
-             |ELSE CAST(array() AS ARRAY<STRUCT<u: BIGINT, v: BIGINT, d: BIGINT>>)
-             |END""".stripMargin)
-        val baskets = e0A.select($"cust", $"supp", lit(1).as("old"))
-          .unionByName(e1.select($"cust", $"supp", lit(0).as("old")))
-          .groupBy($"cust", $"supp").agg(max($"old").as("old"))
-          .groupBy($"cust").agg(
-            graft.functions.BottomKLongAgg.bottomKLong($"supp", 16).as("fs"),
-            // Sentinel domain assumption (ADVICE r12): no real suppkey
-            // may ever equal Long.MaxValue, or the strip below would
-            // delete a genuine epoch-0 basket member. True for TPC-H
-            // surrogate keys (dense small positives); revisit if the
-            // key space ever becomes hashed/synthetic.
-            graft.functions.BottomKLongAgg.bottomKLong(when($"old" === 1, $"supp")
-              .otherwise(lit(Long.MaxValue)), 16).as("os0"))
-          .withColumn("os", filter($"os0", x => x =!= lit(Long.MaxValue)))
-        val delta = baskets
-          .select(explode(concat(pairsArr("fs", 1L), pairsArr("os", -1L))).as("p"))
-          .select($"p.u", $"p.v", $"p.d")
-        // r12: v2 feeds BOTH the node census and the edge readout —
-        // checkpoint it so the maintained-projection merge runs once,
-        // not twice (same missed-reuse the q501 fix closes).
-        val v2 = v1.select($"u", $"v", $"sup".as("d"))
-          .unionAll(delta)
-          .groupBy($"u", $"v").agg(sum($"d").as("sup"))
-          .filter($"sup" >= 8)
-          .localCheckpoint()
-        val nodes = v2.select($"u".as("n")).unionAll(v2.select($"v".as("n")))
-          .distinct().agg(count(lit(1)).as("n_nodes"))
-        val out = Eager(v2.agg(count(lit(1)).as("n_edges"),
-            sum($"sup").as("sup_sum"),
-            sum(($"u" * 131071L + $"v") * $"sup").as("chk"))
-          .crossJoin(broadcast(nodes))
-          .select($"n_nodes", $"n_edges", $"sup_sum", $"chk"))
-        v2.unpersist(blocking = false)
-        out
-      } finally { v1.unpersist(blocking = false); () }
+      val v1 = f.persist(basketPairCounts(edgesOf(o0.select($"o_orderkey", $"o_custkey"))))
+      val affected = o1.select($"o_custkey".as("cust")).distinct()
+      val e0A = edgesOf(o0.select($"o_orderkey", $"o_custkey"))
+        .join(affected, Seq("cust"), "left_semi")
+      val e1 = edgesOf(o1.select($"o_orderkey", $"o_custkey"))
+      // r12 (guide §2.3/§2.4): the delta used to run basketPairCounts
+      // TWICE over overlapping edge sets — once over e0A (negative
+      // pass) and once over e0A ∪ e1 (positive pass, with e0A
+      // recomputed under it and an extra distinct) — ~6 exchanges.
+      // An affected customer's OLD basket and FULL basket come out of
+      // ONE tagged pass instead: dedup (cust, supp) across epochs
+      // keeping the is-epoch-0 flag, then per customer the bounded
+      // 16-smallest baskets ([[graft.functions.BottomKLongAgg]] — the
+      // basketPairCounts cap discipline; the old side rides a
+      // Long.MaxValue sentinel for non-epoch-0 rows, stripped after,
+      // so one aggregate caps both lists) and the in-row ±pair emit.
+      // k-smallest-by-supp ≡ the rn <= 16 cap, so +pairs(full₁₆)
+      // −pairs(old₁₆) sums to exactly what the two projection passes
+      // computed, support by support.
+      def pairsArr(a: String, d: Long) = expr(
+        s"""CASE WHEN size($a) >= 2 THEN
+           |  flatten(transform(sequence(0, size($a)-2),
+           |    i -> transform(sequence(i+1, size($a)-1),
+           |      j -> struct($a[i] AS u, $a[j] AS v, ${d}L AS d))))
+           |ELSE CAST(array() AS ARRAY<STRUCT<u: BIGINT, v: BIGINT, d: BIGINT>>)
+           |END""".stripMargin)
+      val baskets = e0A.select($"cust", $"supp", lit(1).as("old"))
+        .unionByName(e1.select($"cust", $"supp", lit(0).as("old")))
+        .groupBy($"cust", $"supp").agg(max($"old").as("old"))
+        .groupBy($"cust").agg(
+          graft.functions.BottomKLongAgg.bottomKLong($"supp", 16).as("fs"),
+          // Sentinel domain assumption (ADVICE r12): no real suppkey
+          // may ever equal Long.MaxValue, or the strip below would
+          // delete a genuine epoch-0 basket member. True for TPC-H
+          // surrogate keys (dense small positives); revisit if the
+          // key space ever becomes hashed/synthetic.
+          graft.functions.BottomKLongAgg.bottomKLong(when($"old" === 1, $"supp")
+            .otherwise(lit(Long.MaxValue)), 16).as("os0"))
+        .withColumn("os", filter($"os0", x => x =!= lit(Long.MaxValue)))
+      val delta = baskets
+        .select(explode(concat(pairsArr("fs", 1L), pairsArr("os", -1L))).as("p"))
+        .select($"p.u", $"p.v", $"p.d")
+      // r12: v2 feeds BOTH the node census and the edge readout —
+      // checkpoint it so the maintained-projection merge runs once,
+      // not twice (same missed-reuse the q501 fix closes).
+      val v2 = f.checkpoint(v1.select($"u", $"v", $"sup".as("d"))
+        .unionAll(delta)
+        .groupBy($"u", $"v").agg(sum($"d").as("sup"))
+        .filter($"sup" >= 8))
+      val nodes = v2.select($"u".as("n")).unionAll(v2.select($"v".as("n")))
+        .distinct().agg(count(lit(1)).as("n_nodes"))
+      Eager(v2.agg(count(lit(1)).as("n_edges"),
+          sum($"sup").as("sup_sum"),
+          sum(($"u" * 131071L + $"v") * $"sup").as("chk"))
+        .crossJoin(broadcast(nodes))
+        .select($"n_nodes", $"n_edges", $"sup_sum", $"chk"))
     },
     // From-scratch projection over ALL orders — maintained ≡ rebuilt,
     // down to per-edge supports via the exact checksum.
@@ -3287,10 +3093,10 @@ object GraphOps {
 
   /** q490's pipeline over an already-persisted projection, factored
     * for edge tests: harmonic centrality of the top-`k` hubs by
-    * (degree, id) via one multi-source BFS, `rounds` hops deep. */
-  private[graft] def harmonicFromHubs(
-      g: org.apache.spark.sql.DataFrame, k: Int, rounds: Int)
-      : org.apache.spark.sql.DataFrame = {
+    * (degree, id) via one multi-source BFS, `rounds` hops deep —
+    * Eager'd, so its checkpoints live in a scope of their own. */
+  private[graft] def harmonicFromHubs(g: DataFrame, k: Int, rounds: Int)
+      : DataFrame = Frames.scoped { f =>
     import g.sparkSession.implicits._
     // localCheckpoint, not persist: the symmetric closure sits under
     // EVERY round's plan, and each round's frame also references the
@@ -3300,19 +3106,16 @@ object GraphOps {
     // re-observed here: round 3 spent 11 s PLANNING 40 rows). The
     // checkpoint also materializes the projection at the session's
     // full shuffle width, outside the narrowed loop scope below.
-    val bi = g.select($"u".as("src"), $"v".as("dst"))
-      .unionAll(g.select($"v".as("src"), $"u".as("dst")))
-      .localCheckpoint()
+    val bi = f.checkpoint(g.select($"u".as("src"), $"v".as("dst"))
+      .unionAll(g.select($"v".as("src"), $"u".as("dst"))))
     graft.Confs.withShufflePartitions(g.sparkSession, 8) {
-      val deg = bi.groupBy($"src".as("n")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint()
+      val deg = f.checkpoint(bi.groupBy($"src".as("n")).agg(count(lit(1)).as("deg")))
       // Deterministic seed pick: (deg, n) is a total order (node ids
       // are unique), so top-k is engine-independent.
-      val seeds = deg.orderBy($"deg".desc, $"n").limit(k)
-        .select($"n".as("seed"), $"deg".as("seed_deg"))
-        .localCheckpoint()
-      val seed0 = seeds.select($"seed", $"seed".as("node"), lit(0L).as("dist"))
-        .localCheckpoint()
+      val seeds = f.checkpoint(deg.orderBy($"deg".desc, $"n").limit(k)
+        .select($"n".as("seed"), $"deg".as("seed_deg")))
+      val seed0 = f.checkpoint(
+        seeds.select($"seed", $"seed".as("node"), lit(0L).as("dist")))
       // q226's BFS discipline, multi-source: the frontier is keyed
       // (seed, node) so all k sources ride ONE edge join per round;
       // frontier/visited sides broadcast (k × component-size rows),
@@ -3322,7 +3125,7 @@ object GraphOps {
       var frontier = seed0
       for (i <- 1 to rounds) {
         val best = roundFrames.reduce(_ unionByName _)
-        val nxt = bfsRound(bi, frontier, best, i).localCheckpoint()
+        val nxt = f.checkpoint(bfsRound(bi, frontier, best, i))
         roundFrames = nxt :: roundFrames
         frontier = nxt
       }
@@ -3367,12 +3170,8 @@ object GraphOps {
     * engines land on the unique fixed point. */
   val q490 = QuerySpec(
     "q490_harmonic_centrality",
-    (s, d) => {
-      import s.implicits._
-      val edges = tradeEdges(s, d).persist(StorageLevel.MEMORY_AND_DISK)
-      val g = coPurchaseEdges(edges).persist(StorageLevel.MEMORY_AND_DISK)
-      try harmonicFromHubs(g, 8, 3)
-      finally { g.unpersist(blocking = false); edges.unpersist(blocking = false) }
+    (s, d) => Frames.scoped { f =>
+      harmonicFromHubs(persistedCoPurchase(f, s, d), 8, 3)
     },
     Some(s"""WITH RECURSIVE $sqlCoPurchaseCtes,
             |bi AS MATERIALIZED (SELECT u AS src, v AS dst FROM g

@@ -1741,7 +1741,8 @@ object NearDup {
     * point-level DBSCAN's (clones share adjacency, so a whole group
     * always lands in one role). Returns one row per cluster (+ the
     * cluster_id = -1 noise row). */
-  private[graft] def dbscanClusters(pairs: DataFrame, reps: DataFrame): DataFrame = {
+  private[graft] def dbscanClusters(pairs: DataFrame,
+      reps: DataFrame): DataFrame = graft.Frames.scoped { f =>
     import pairs.sparkSession.implicits._
     val bi = pairs.select($"u".as("n"), $"v".as("m"))
       .unionAll(pairs.select($"v".as("n"), $"u".as("m")))
@@ -1750,51 +1751,42 @@ object NearDup {
         broadcast(reps.select($"rid".as("m"), $"g")), Seq("m"))
         .select($"n", $"g".as("w")))
       .groupBy($"n").agg(sum($"w").as("mass"))
-    val core = mass.filter($"mass" >= 2).select($"n")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val coreEdges = pairs
-        .join(core.select($"n".as("u")), Seq("u"), "left_semi")
-        .join(core.select($"n".as("v")), Seq("v"), "left_semi")
-      // r13: components via star contraction instead of min-label
-      // propagation — identical unique fixed point (component-minimum
-      // labels; the q506 ≡ q485 equivalence), but the density clusters'
-      // chained neighborhoods give the ε-graph real diameter, where
-      // propagation pays one round per unit and contraction halves path
-      // lengths per pair of rounds (A/B at sf0.1: 5.2-6.8 s → 3.2-4.0 s
-      // for the labeling phase).
-      val lbl0 = GraphOps.starContractLabels(coreEdges.select($"u", $"v"))
-      val isolated = core.select($"n".as("node"))
-        .join(lbl0.select($"node"), Seq("node"), "left_anti")
-        .select($"node", $"node".as("label"))
-      val lbl = lbl0.select($"node", $"label").unionByName(isolated)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val borders = bi
-        .join(core, Seq("n"), "left_anti")
-        .join(lbl.select($"node".as("m"), $"label"), Seq("m"))
-        .groupBy($"n").agg(min($"label").as("label"))
-        .select($"n".as("node"), $"label")
-      val members = lbl.select($"node", $"label", lit(1L).as("is_core"))
-        .unionByName(borders.select($"node", $"label", lit(0L).as("is_core")))
-        .join(broadcast(reps.select($"rid".as("node"), $"g", $"idsum")), Seq("node"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val clusters = members.groupBy($"label".as("cluster_id"))
-        .agg(sum($"is_core" * $"g").as("n_core"),
-          sum((lit(1L) - $"is_core") * $"g").as("n_border"),
-          sum($"g").as("n_total"),
-          sum($"idsum").as("chk"))
-      val noise = reps
-        .join(members.select($"node".as("rid")), Seq("rid"), "left_anti")
-        .agg(coalesce(sum($"g"), lit(0L)).as("n_total"),
-          coalesce(sum($"idsum"), lit(0L)).as("chk"))
-        .select(lit(-1L).as("cluster_id"), lit(0L).as("n_core"),
-          lit(0L).as("n_border"), $"n_total", $"chk")
-      val out = Eager(clusters.unionByName(noise).orderBy($"cluster_id"))
-      lbl0.unpersist(blocking = false)
-      lbl.unpersist(blocking = false)
-      members.unpersist(blocking = false)
-      out
-    } finally { core.unpersist(blocking = false); () }
+    val core = f.persist(mass.filter($"mass" >= 2).select($"n"))
+    val coreEdges = pairs
+      .join(core.select($"n".as("u")), Seq("u"), "left_semi")
+      .join(core.select($"n".as("v")), Seq("v"), "left_semi")
+    // r13: components via star contraction instead of min-label
+    // propagation — identical unique fixed point (component-minimum
+    // labels; the q506 ≡ q485 equivalence), but the density clusters'
+    // chained neighborhoods give the ε-graph real diameter, where
+    // propagation pays one round per unit and contraction halves path
+    // lengths per pair of rounds (A/B at sf0.1: 5.2-6.8 s → 3.2-4.0 s
+    // for the labeling phase).
+    val lbl0 = GraphOps.starContractLabels(f, coreEdges.select($"u", $"v"))
+    val isolated = core.select($"n".as("node"))
+      .join(lbl0.select($"node"), Seq("node"), "left_anti")
+      .select($"node", $"node".as("label"))
+    val lbl = f.persist(lbl0.select($"node", $"label").unionByName(isolated))
+    val borders = bi
+      .join(core, Seq("n"), "left_anti")
+      .join(lbl.select($"node".as("m"), $"label"), Seq("m"))
+      .groupBy($"n").agg(min($"label").as("label"))
+      .select($"n".as("node"), $"label")
+    val members = f.persist(lbl.select($"node", $"label", lit(1L).as("is_core"))
+      .unionByName(borders.select($"node", $"label", lit(0L).as("is_core")))
+      .join(broadcast(reps.select($"rid".as("node"), $"g", $"idsum")), Seq("node")))
+    val clusters = members.groupBy($"label".as("cluster_id"))
+      .agg(sum($"is_core" * $"g").as("n_core"),
+        sum((lit(1L) - $"is_core") * $"g").as("n_border"),
+        sum($"g").as("n_total"),
+        sum($"idsum").as("chk"))
+    val noise = reps
+      .join(members.select($"node".as("rid")), Seq("rid"), "left_anti")
+      .agg(coalesce(sum($"g"), lit(0L)).as("n_total"),
+        coalesce(sum($"idsum"), lit(0L)).as("chk"))
+      .select(lit(-1L).as("cluster_id"), lit(0L).as("n_core"),
+        lit(0L).as("n_border"), $"n_total", $"chk")
+    Eager(clusters.unionByName(noise).orderBy($"cluster_id"))
   }
 
   /** q493 — DBSCAN-style density clustering over the embedding corpus

@@ -359,7 +359,7 @@ object SqlSurface {
       // tasks × depth ≈ 23 — the per-iteration surface ambient load
       // multiplies (the contract's worst 8c/32c ratio). The frame is
       // CALENDAR-bounded at any corpus size, so the recursion rides the
-      // loopWidth rule (resolves to its floor here — a data-volume
+      // derived-width rule (resolves to its floor here — a data-volume
       // bound, not a local-core tune). Eager'd inside the scope so the
       // iterations actually execute at this width; the readout is
       // O(quarters) rows.
@@ -370,7 +370,7 @@ object SqlSurface {
       // at any corpus size, so AQE can never help this query at any
       // scale — placement/planning only, results identical.
       graft.Confs.withShufflePartitions(s,
-        GraphOps.loopWidth(s, quarters.count())) {
+        graft.Confs.derivedWidth(s, quarters.count(), 8)) {
         graft.Confs.withConf(s, "spark.sql.adaptive.enabled", "false") {
         Eager(s.sql("""WITH RECURSIVE ema(i, qtr, cnt, ema_ppm) AS (
               |  SELECT i, qtr, cnt, cnt * 1000000L FROM graft_quarter_counts WHERE i = 1

@@ -1476,75 +1476,69 @@ object TrainPrep {
 
   val q501 = QuerySpec(
     "q501_incremental_kmeans_update",
-    (s, d) => {
+    (s, d) => graft.Frames.scoped { f =>
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
-      val long = Tables.fanOut(Tables.embeddings(s, d), col("vec_id"))
+      val long = f.persist(Tables.fanOut(Tables.embeddings(s, d), col("vec_id"))
         .select($"vec_id", posexplode($"embedding").as(Seq("dim", "xf")))
-        .select($"vec_id", $"dim", $"xf".cast("double").as("x"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val evens = long.filter($"vec_id" % 2 === 0)
-        val odds = long.filter($"vec_id" % 2 === 1)
-        def assignTo(pts: org.apache.spark.sql.DataFrame,
-            cent: org.apache.spark.sql.DataFrame) = kmeansAssign(pts, cent)
-        def meansOf(pts: org.apache.spark.sql.DataFrame,
-            assign: org.apache.spark.sql.DataFrame) =
-          pts.join(assign, Seq("vec_id"))
-            .groupBy($"cid", $"dim")
-            .agg((Det.dsum($"x", 6) / count($"x")).as("c"))
-        // Epoch 0: q236's two Lloyd iterations over the evens.
-        // r12 (guide §5 caching/lineage): the assignment and centroid
-        // frames each feed MULTIPLE consumers below (aEven → stats +
-        // membership census; cEven → delta assign + drift; aOdd →
-        // delta stats + census + n_added), and none were materialized
-        // — every consumer re-ran the whole Lloyd chain, so the two
-        // epoch-0 iterations executed up to three times per query.
-        // localCheckpoint each hand-off frame (all are tiny: |vecs| or
-        // k×dims rows) so the chain runs once; values unchanged — the
-        // assignment is deterministic (exact DECIMAL distance, argmin
-        // by (dist, cid)) so even the uncheckpointed form was
-        // value-stable, just wasteful.
-        val init = Tables.embeddings(s, d).filter($"vec_id" % 2 === 0)
-          .select($"vec_id", ($"vec_id" % 4).as("cid"))
-        val aEven = assignTo(evens, meansOf(evens, assignTo(evens, meansOf(evens, init))))
-          .localCheckpoint()
-        // The MAINTAINED state: mergeable per-(cluster, dim) stats.
-        val statsEven = evens.join(aEven, Seq("vec_id"))
+        .select($"vec_id", $"dim", $"xf".cast("double").as("x")))
+      val evens = long.filter($"vec_id" % 2 === 0)
+      val odds = long.filter($"vec_id" % 2 === 1)
+      def assignTo(pts: org.apache.spark.sql.DataFrame,
+          cent: org.apache.spark.sql.DataFrame) = kmeansAssign(pts, cent)
+      def meansOf(pts: org.apache.spark.sql.DataFrame,
+          assign: org.apache.spark.sql.DataFrame) =
+        pts.join(assign, Seq("vec_id"))
           .groupBy($"cid", $"dim")
-          .agg(sum($"x".cast("decimal(30,6)")).as("sx"),
-            count($"x").as("n"))
-          .localCheckpoint()
-        val cEven = statsEven
-          .select($"cid", $"dim", ($"sx".cast("double") / $"n").as("c"))
-        // Delta: assign odds to the FROZEN epoch-0 centroids, fold in
-        // by stats addition.
-        val aOdd = assignTo(odds, cEven).localCheckpoint()
-        val statsOdd = odds.join(aOdd, Seq("vec_id"))
-          .groupBy($"cid", $"dim")
-          .agg(sum($"x".cast("decimal(30,6)")).as("sx"), count($"x").as("n"))
-        val merged = statsEven.unionByName(statsOdd)
-          .groupBy($"cid", $"dim")
-          .agg(sum($"sx").as("sx"), sum($"n").as("n"))
-          .select($"cid", $"dim", ($"sx".cast("double") / $"n").as("cn"))
-        val drift = merged.join(cEven, Seq("cid", "dim"))
-          .groupBy($"cid")
-          .agg(sum((($"cn" - $"c") * ($"cn" - $"c")).cast("decimal(30,12)"))
-            .cast("double").as("drift"))
-        val members = aEven.unionByName(aOdd)
-        val out = Eager(members.groupBy($"cid")
-          .agg(count(lit(1)).as("n_vecs"), sum($"vec_id").as("id_checksum"))
-          .join(aOdd.groupBy($"cid").agg(count(lit(1)).as("n_added")), Seq("cid"), "left")
-          .na.fill(0L, Seq("n_added"))
-          .join(drift, Seq("cid"))
-          .select($"cid".cast("long").as("cid"), $"n_vecs", $"n_added",
-            $"id_checksum", $"drift")
-          .orderBy($"cid"))
-        // Eager above materialized the readout — release the hand-off
-        // checkpoints (the louvainLoop cleanup discipline).
-        Seq(aEven, statsEven, aOdd).foreach(_.unpersist(blocking = false))
-        out
-      } finally { long.unpersist(); () }
+          .agg((Det.dsum($"x", 6) / count($"x")).as("c"))
+      // Epoch 0: q236's two Lloyd iterations over the evens.
+      // r12 (guide §5 caching/lineage): the assignment and centroid
+      // frames each feed MULTIPLE consumers below (aEven → stats +
+      // membership census; cEven → delta assign + drift; aOdd →
+      // delta stats + census + n_added), and none were materialized
+      // — every consumer re-ran the whole Lloyd chain, so the two
+      // epoch-0 iterations executed up to three times per query.
+      // localCheckpoint each hand-off frame (all are tiny: |vecs| or
+      // k×dims rows) so the chain runs once; values unchanged — the
+      // assignment is deterministic (exact DECIMAL distance, argmin
+      // by (dist, cid)) so even the uncheckpointed form was
+      // value-stable, just wasteful.
+      val init = Tables.embeddings(s, d).filter($"vec_id" % 2 === 0)
+        .select($"vec_id", ($"vec_id" % 4).as("cid"))
+      val aEven = f.checkpoint(
+        assignTo(evens, meansOf(evens, assignTo(evens, meansOf(evens, init)))))
+      // The MAINTAINED state: mergeable per-(cluster, dim) stats.
+      val statsEven = f.checkpoint(evens.join(aEven, Seq("vec_id"))
+        .groupBy($"cid", $"dim")
+        .agg(sum($"x".cast("decimal(30,6)")).as("sx"),
+          count($"x").as("n")))
+      val cEven = statsEven
+        .select($"cid", $"dim", ($"sx".cast("double") / $"n").as("c"))
+      // Delta: assign odds to the FROZEN epoch-0 centroids, fold in
+      // by stats addition.
+      val aOdd = f.checkpoint(assignTo(odds, cEven))
+      val statsOdd = odds.join(aOdd, Seq("vec_id"))
+        .groupBy($"cid", $"dim")
+        .agg(sum($"x".cast("decimal(30,6)")).as("sx"), count($"x").as("n"))
+      val merged = statsEven.unionByName(statsOdd)
+        .groupBy($"cid", $"dim")
+        .agg(sum($"sx").as("sx"), sum($"n").as("n"))
+        .select($"cid", $"dim", ($"sx".cast("double") / $"n").as("cn"))
+      val drift = merged.join(cEven, Seq("cid", "dim"))
+        .groupBy($"cid")
+        .agg(sum((($"cn" - $"c") * ($"cn" - $"c")).cast("decimal(30,12)"))
+          .cast("double").as("drift"))
+      val members = aEven.unionByName(aOdd)
+      // Eager: the readout outlives the scope that frees the hand-off
+      // checkpoints.
+      Eager(members.groupBy($"cid")
+        .agg(count(lit(1)).as("n_vecs"), sum($"vec_id").as("id_checksum"))
+        .join(aOdd.groupBy($"cid").agg(count(lit(1)).as("n_added")), Seq("cid"), "left")
+        .na.fill(0L, Seq("n_added"))
+        .join(drift, Seq("cid"))
+        .select($"cid".cast("long").as("cid"), $"n_vecs", $"n_added",
+          $"id_checksum", $"drift")
+        .orderBy($"cid"))
     },
     Some("""WITH long AS (
            |  SELECT vec_id, CAST(unnest(range(len(v))) AS INT) AS dim, unnest(v) AS x

@@ -26,33 +26,16 @@ private[streaming] object StreamHarness {
   def withStreamingPartitions[T](spark: SparkSession, n: Int)(f: => T): T =
     graft.Confs.withShufflePartitions(spark, n)(f)
 
-  /** State-partition width DERIVED from the row census of the table the
-    * stream consumes — GraphOps.loopWidth's rule (~500k rows per
-    * partition, floored at 8, capped at the session width), r13: the
-    * round-12 form pinned a literal 8, which is right for the drained
-    * verification fixtures (thousands of state rows) and wrong for a
-    * production stream whose state is millions of rows — the width a
-    * streaming query fixes at first start must track STATE volume, for
-    * which the staged input's row count is the natural upper-bound
-    * proxy. At fixture scale this resolves to the old floor (8), so
-    * bench numbers stay comparable; at 100 TB feed rates it scales to
-    * the session (cluster) width. */
-  def derivedPartitions(spark: SparkSession, rows: Long): Int = {
-    val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val byVolume = ((rows + 499999L) / 500000L).toInt
-    // Floor 4, not loopWidth's 8: per-batch state-store fixed cost
-    // (open/snapshot/commit per partition per micro-batch) dominates
-    // when state is under the by-volume term's first step, and the
-    // drained fixtures measured ~0.5 s/query cheaper at 4 with results
-    // identical (placement only). The by-volume term, not the floor,
-    // is what carries production scale.
-    math.min(session, math.max(4, byVolume))
-  }
-
-  /** [[withStreamingPartitions]] at the [[derivedPartitions]] width. */
+  /** [[withStreamingPartitions]] at the width derived from the row
+    * census of the table the stream consumes ([[graft.Confs.derivedWidth]],
+    * floor 4): the width a streaming query fixes at first start must
+    * track STATE volume, for which the staged input's row count is the
+    * natural upper-bound proxy. At fixture scale this resolves to the
+    * floor; at 100 TB feed rates it scales to the session (cluster)
+    * width. */
   def withDerivedStreamingPartitions[T](spark: SparkSession, rows: Long)(
       f: => T): T =
-    withStreamingPartitions(spark, derivedPartitions(spark, rows))(f)
+    withStreamingPartitions(spark, graft.Confs.derivedWidth(spark, rows, 4))(f)
 
   /** Stage a named feed into a stream inbox as one parquet file per
     * name, in ONE Spark job (union partitioned by a feed-name column)
@@ -235,7 +218,7 @@ private[streaming] final class StreamHarness(
 
   /** [[withStreamingPartitions]] at the width derived from THIS
     * harness's staged input census (r13 — see
-    * StreamHarness.derivedPartitions): a parquet count over the staged
+    * graft.Confs.derivedWidth): a parquet count over the staged
     * copy (footer-cheap) replaces the round-12 literal 8. */
   def withDerivedStreamingPartitions[T](f: => T): T =
     StreamHarness.withDerivedStreamingPartitions(spark,

@@ -14,9 +14,8 @@ class GraphOpsSpec extends SparkTestBase {
   private def labelsOf(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
     val df = edges.toDF("src", "dst")
-    val out = GraphOps.minLabel(df).collect()
+    graft.Frames.scoped(f => GraphOps.minLabel(f, df).collect())
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    out
   }
 
   test("a chain converges to the minimum id (multi-round propagation)") {

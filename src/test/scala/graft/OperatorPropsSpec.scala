@@ -143,8 +143,9 @@ class OperatorPropsSpec extends SparkTestBase {
         if (ra != rb) { val keep = math.min(ra, rb); parent(math.max(ra, rb)) = keep }
       }
       val expected = parent.keys.map(v => v -> find(v)).toMap
-      val got = graft.queries.GraphOps.minLabel(edges.toDF("src", "dst"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val got = graft.Frames.scoped(f =>
+          graft.queries.GraphOps.minLabel(f, edges.toDF("src", "dst")).collect())
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got === expected)
     }
   }

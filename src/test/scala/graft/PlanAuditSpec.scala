@@ -920,9 +920,9 @@ class PlanAuditSpec extends SparkTestBase {
     val edges = graft.queries.GraphOps.tradeEdges(spark, sf)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val p = graft.queries.GraphOps.hitsAuthorities(edges)
+      val p = graft.Frames.scoped(f => graft.queries.GraphOps.hitsAuthorities(f, edges)
         .queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       // Three cache reads (a1 census + the two per-round joins); the
       // "Scan parquet" text inside each InMemoryRelation is the cached
       // build's DESCRIPTION, not a re-execution, so the pin counts
@@ -1011,9 +1011,9 @@ class PlanAuditSpec extends SparkTestBase {
     val g = graft.queries.GraphOps.coPurchaseEdges(edges)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val p = graft.queries.GraphOps.triangleCensus(g)
+      val p = graft.Frames.scoped(f => graft.queries.GraphOps.triangleCensus(f, g)
         .queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       // The two-path join must build from the (deg, id)-oriented
       // (lo, hi) columns — the hub-proofing orientation — not raw (u, v).
       assert(p.contains("lo#") && p.contains("hi#"),
@@ -1058,18 +1058,20 @@ class PlanAuditSpec extends SparkTestBase {
       // not re-derivations of the projection: the peel/propagation
       // rounds reference their parent 2-3 times each, so an
       // un-truncated loop compounds the logical plan k^rounds.
-      val (core, _) = graft.queries.GraphOps.peel3Core(g, 2)
-      val pCore = core.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      assert(pCore.contains("ExistingRDD"),
-        "peel round output is not a checkpoint scan\n" + pCore)
-      assert(!pCore.contains("WindowGroupLimit"),
-        "peel output replays the projection build\n" + pCore)
-      val lbl = graft.queries.GraphOps.propagateLabels(g, 2)
-      val pLbl = lbl.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      assert(pLbl.contains("ExistingRDD"),
-        "LPA round output is not a checkpoint scan\n" + pLbl)
+      graft.Frames.scoped { f =>
+        val (core, _) = graft.queries.GraphOps.peel3Core(f, g, 2)
+        val pCore = core.queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        assert(pCore.contains("ExistingRDD"),
+          "peel round output is not a checkpoint scan\n" + pCore)
+        assert(!pCore.contains("WindowGroupLimit"),
+          "peel output replays the projection build\n" + pCore)
+        val lbl = graft.queries.GraphOps.propagateLabels(f, g, 2)
+        val pLbl = lbl.queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        assert(pLbl.contains("ExistingRDD"),
+          "LPA round output is not a checkpoint scan\n" + pLbl)
+      }
     } finally edges.unpersist(blocking = false)
   }
 
@@ -1079,9 +1081,9 @@ class PlanAuditSpec extends SparkTestBase {
     val g = graft.queries.GraphOps.coPurchaseEdges(edges)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val p = graft.queries.GraphOps.commonNeighborStrength(g)
+      val p = graft.Frames.scoped(f => graft.queries.GraphOps.commonNeighborStrength(f, g)
         .queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
       assert(p.contains("LeftSemi"),
         "v-adjacency re-cap must be a semi-join\n" + p)
       assert(!p.contains("CartesianProduct"),
@@ -1405,8 +1407,8 @@ class PlanAuditSpec extends SparkTestBase {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val g = graft.queries.GraphOps.coPurchaseEdges(edges)
-      val com = graft.queries.GraphOps.louvainRounds(g, 2)
-      val p = com.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      val p = graft.Frames.scoped(f => graft.queries.GraphOps.louvainRounds(f, g, 2)
+        .queryExecution.explainString(ExplainMode.fromString("formatted")))
       assert(p.contains("Scan ExistingRDD"),
         "Louvain round output is not a checkpoint scan\n" + p)
       assert(!p.contains("WindowGroupLimit"),
@@ -1639,15 +1641,16 @@ class PlanAuditSpec extends SparkTestBase {
     // aggregate frames — nothing may degrade to a product, and the
     // checkpoint means the edge frame is walked exactly once however
     // many consumers the caller wires up.
-    val (e2, str2, merged) = graft.queries.GraphOps.louvainContract(
-      gw, p1, graft.queries.GraphOps.maybeBroadcast(13))
-    val ps = planNoAutoBroadcast(str2)
-    assert(!ps.contains("CartesianProduct") && !ps.contains("BroadcastNestedLoopJoin"), ps)
-    // The super-edge slice and the strength frame must read the
-    // checkpointed pass, not re-derive it (plan shows the RDD scan).
-    assert(planNoAutoBroadcast(e2).contains("Scan ExistingRDD"), planNoAutoBroadcast(e2))
-    assert(ps.contains("Scan ExistingRDD"), ps)
-    merged.unpersist(blocking = false)
+    graft.Frames.scoped { f =>
+      val (e2, str2) = graft.queries.GraphOps.louvainContract(
+        f, gw, p1, graft.queries.GraphOps.maybeBroadcast(13))
+      val ps = planNoAutoBroadcast(str2)
+      assert(!ps.contains("CartesianProduct") && !ps.contains("BroadcastNestedLoopJoin"), ps)
+      // The super-edge slice and the strength frame must read the
+      // checkpointed pass, not re-derive it (plan shows the RDD scan).
+      assert(planNoAutoBroadcast(e2).contains("Scan ExistingRDD"), planNoAutoBroadcast(e2))
+      assert(ps.contains("Scan ExistingRDD"), ps)
+    }
     // Past the cap the gate must be the only broadcast source.
     val peBig = planNoAutoBroadcast(graft.queries.GraphOps.louvainContractMerged(
       gw, p1, graft.queries.GraphOps.maybeBroadcast(

@@ -7,8 +7,16 @@ package graft
   */
 class QueriesSpec extends SparkTestBase {
 
+  /** Queries whose persisted and checkpointed frames are owned by a
+    * [[Frames]] scope: one call must leave no persistent RDD behind —
+    * no harness sweep is needed to free their blocks. */
+  private val leakChecked: Set[String] =
+    graft.queries.GraphOps.all.map(_.name).toSet +
+      "q501_incremental_kmeans_update" + "q493_dbscan_embeddings"
+
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"$name: non-empty, deterministic, atomic-schema at sf0.001") {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
       val df = fn(spark, sf)
       // The q279 lesson: the driver's oracle gate canonicalizes with
       // pandas sort_values, which cannot sort ndarray/dict cells — an
@@ -20,6 +28,12 @@ class QueriesSpec extends SparkTestBase {
           s"sort/hash them): ${nonAtomic.mkString(", ")}")
       val first = df.collect().toSeq
       assert(first.nonEmpty, s"$name returned 0 rows")
+      if (leakChecked(name)) {
+        // Only additions count: the ContextCleaner may free an older
+        // RDD meanwhile, which is not this query's doing.
+        val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+        assert(leaked.isEmpty, s"$name left persistent RDDs behind: $leaked")
+      }
       val second = fn(spark, sf).collect().toSeq
       assert(first === second, s"$name is non-deterministic across runs")
     }

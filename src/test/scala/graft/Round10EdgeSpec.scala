@@ -24,39 +24,43 @@ class Round10EdgeSpec extends SparkTestBase {
     (1L, 5L), (2L, 6L), (3L, 7L))
 
   test("louvain vs LPA: LPA floods the 3-bridge double-K4; Louvain recovers the cliques") {
-    // LPA (q481's 4 sweeps, min tie-break): label 1 floods across the
-    // three bridges — ONE community, whose modularity is exactly 0
-    // (e_in = m and (d/2m)² = 1 cancel).
-    val lpa = GraphOps.propagateLabels(bridgedK4s, 4).collect()
-    assert(lpa.map(_.getLong(1)).distinct.toSeq === Seq(1L), lpa.mkString(","))
-    // Louvain (q495's 4 parity sweeps): the exact ΔQ rule resists the flood
-    // and lands on the two cliques — Q = 2 × (6/15 − (15/30)²) =
-    // 300000 ppm, strictly better than LPA's 0 on the SAME graph.
-    val com = GraphOps.louvainRounds(bridgedK4s, 4).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(Set(1L, 2L, 3L, 4L).map(com) .size === 1, com.toString)
-    assert(Set(5L, 6L, 7L, 8L).map(com).size === 1, com.toString)
-    assert(com(1L) !== com(5L), com.toString)
-    val census = GraphOps.modularityCensus(bridgedK4s,
-        GraphOps.louvainRounds(bridgedK4s, 4))
-      .collect().map(r => r.getLong(0) -> r).toMap
-    assert(census(-1L).getAs[Long]("contribution_ppm") === 300000L)
-    val lpaCensus = GraphOps.modularityCensus(bridgedK4s,
-        GraphOps.propagateLabels(bridgedK4s, 4)
-          .withColumnRenamed("lbl", "com"))
-      .collect().map(r => r.getLong(0) -> r).toMap
-    assert(lpaCensus(-1L).getAs[Long]("contribution_ppm") === 0L)
+    graft.Frames.scoped { f =>
+      // LPA (q481's 4 sweeps, min tie-break): label 1 floods across the
+      // three bridges — ONE community, whose modularity is exactly 0
+      // (e_in = m and (d/2m)² = 1 cancel).
+      val lpa = GraphOps.propagateLabels(f, bridgedK4s, 4).collect()
+      assert(lpa.map(_.getLong(1)).distinct.toSeq === Seq(1L), lpa.mkString(","))
+      // Louvain (q495's 4 parity sweeps): the exact ΔQ rule resists the flood
+      // and lands on the two cliques — Q = 2 × (6/15 − (15/30)²) =
+      // 300000 ppm, strictly better than LPA's 0 on the SAME graph.
+      val com = GraphOps.louvainRounds(f, bridgedK4s, 4).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(Set(1L, 2L, 3L, 4L).map(com) .size === 1, com.toString)
+      assert(Set(5L, 6L, 7L, 8L).map(com).size === 1, com.toString)
+      assert(com(1L) !== com(5L), com.toString)
+      val census = GraphOps.modularityCensus(bridgedK4s,
+          GraphOps.louvainRounds(f, bridgedK4s, 4))
+        .collect().map(r => r.getLong(0) -> r).toMap
+      assert(census(-1L).getAs[Long]("contribution_ppm") === 300000L)
+      val lpaCensus = GraphOps.modularityCensus(bridgedK4s,
+          GraphOps.propagateLabels(f, bridgedK4s, 4)
+            .withColumnRenamed("lbl", "com"))
+        .collect().map(r => r.getLong(0) -> r).toMap
+      assert(lpaCensus(-1L).getAs[Long]("contribution_ppm") === 0L)
+    }
   }
 
   test("louvainRounds: a lone edge stays merged — the pair is one community") {
-    // THE semi-synchronous pin: under all-move rounds the two
-    // endpoints would swap communities forever (1→com2 and 2→com1
-    // every round — never merged); the parity coloring moves only
-    // node 1 in round 1 (score 2m·1 − kn·kn = 1 > 0 beats staying),
-    // after which node 2's best move is to stay home with it.
-    val com = GraphOps.louvainRounds(edges((1L, 2L)), 4).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(com(1L) === com(2L), com.toString)
+    graft.Frames.scoped { f =>
+      // THE semi-synchronous pin: under all-move rounds the two
+      // endpoints would swap communities forever (1→com2 and 2→com1
+      // every round — never merged); the parity coloring moves only
+      // node 1 in round 1 (score 2m·1 − kn·kn = 1 > 0 beats staying),
+      // after which node 2's best move is to stay home with it.
+      val com = GraphOps.louvainRounds(f, edges((1L, 2L)), 4).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(com(1L) === com(2L), com.toString)
+    }
   }
 
   test("harmonicFromHubs: rounds=5 derives lcm scaling (harmonic_x60), exact fifths") {

@@ -99,35 +99,37 @@ class Round11EdgeSpec extends SparkTestBase {
   }
 
   test("weighted vs unweighted Louvain disagree: one heavy tie beats many light ties") {
-    import graft.queries.GraphOps
-    // Two HEAVY PAIRS: A = (2,5) at support 9, B = (6,9) at support 9
-    // — each pair spans the parity classes, so it fuses in round 1 and
-    // nothing ever swap-oscillates. Bridge node 3 (odd) is tied to A by
-    // ONE support-5 edge and to B by TWO support-1 edges. Edge COUNT
-    // says B (2 ties beat 1, once B has fused); edge WEIGHT says A
-    // (mass 5 beats 2) — the exact evidence distinction the weighted
-    // ascent exists for: the unweighted walk moves 3 into B on the
-    // round-3 reconsideration, the weighted walk holds it in A at every
-    // round.
-    val wEdges = spark.createDataFrame(Seq(
-      (2L, 5L, 9L), (6L, 9L, 9L),
-      (3L, 2L, 5L), (3L, 6L, 1L), (3L, 9L, 1L)))
-      .toDF("u", "v", "sup")
-    val unw = GraphOps.louvainRounds(wEdges.select(col("u"), col("v")), 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val wtd = GraphOps.louvainRoundsWeighted(wEdges, 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // Both keep the pairs intact...
-    for (com <- Seq(unw, wtd)) {
-      assert(Set(2L, 5L).map(com).size === 1, com.toString)
-      assert(Set(6L, 9L).map(com).size === 1, com.toString)
-      assert(com(2L) !== com(6L), com.toString)
+    graft.Frames.scoped { f =>
+      import graft.queries.GraphOps
+      // Two HEAVY PAIRS: A = (2,5) at support 9, B = (6,9) at support 9
+      // — each pair spans the parity classes, so it fuses in round 1 and
+      // nothing ever swap-oscillates. Bridge node 3 (odd) is tied to A by
+      // ONE support-5 edge and to B by TWO support-1 edges. Edge COUNT
+      // says B (2 ties beat 1, once B has fused); edge WEIGHT says A
+      // (mass 5 beats 2) — the exact evidence distinction the weighted
+      // ascent exists for: the unweighted walk moves 3 into B on the
+      // round-3 reconsideration, the weighted walk holds it in A at every
+      // round.
+      val wEdges = spark.createDataFrame(Seq(
+        (2L, 5L, 9L), (6L, 9L, 9L),
+        (3L, 2L, 5L), (3L, 6L, 1L), (3L, 9L, 1L)))
+        .toDF("u", "v", "sup")
+      val unw = GraphOps.louvainRounds(f, wEdges.select(col("u"), col("v")), 4)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val wtd = GraphOps.louvainRoundsWeighted(f, wEdges, 4)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // Both keep the pairs intact...
+      for (com <- Seq(unw, wtd)) {
+        assert(Set(2L, 5L).map(com).size === 1, com.toString)
+        assert(Set(6L, 9L).map(com).size === 1, com.toString)
+        assert(com(2L) !== com(6L), com.toString)
+      }
+      // ...and disagree exactly on the bridge node.
+      assert(unw(3L) === unw(6L),
+        s"unweighted Louvain should follow the 2 light ties into B: $unw")
+      assert(wtd(3L) === wtd(2L),
+        s"weighted Louvain should follow the heavy tie into A: $wtd")
     }
-    // ...and disagree exactly on the bridge node.
-    assert(unw(3L) === unw(6L),
-      s"unweighted Louvain should follow the 2 light ties into B: $unw")
-    assert(wtd(3L) === wtd(2L),
-      s"weighted Louvain should follow the heavy tie into A: $wtd")
   }
 
   test("q505 keep-first vs q160 drop-all: the first occurrence survives, later ones go") {
@@ -176,77 +178,83 @@ class Round11EdgeSpec extends SparkTestBase {
       .map("%02x".format(_)).mkString
 
   test("two-level Louvain merges what one level cannot, and strictly improves Q") {
-    import graft.queries.GraphOps
-    import spark.implicits._
-    // Four heavy pairs chained by medium ties into two natural groups,
-    // with a weight-1 bridge between the groups: level 1 can only form
-    // the pairs (any single node leaving its support-10 partner loses
-    // more than a support-8 tie gains), but moving a WHOLE pair across
-    // a tie is Q-positive — exactly the move contraction unlocks.
-    val g = spark.createDataFrame(Seq(
-      (1L, 2L, 10L), (3L, 4L, 10L), (5L, 6L, 10L), (7L, 8L, 10L),
-      (2L, 3L, 8L), (6L, 7L, 8L), (4L, 5L, 1L)))
-      .toDF("u", "v", "sup")
-    val p1 = GraphOps.louvainRoundsWeighted(g, 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // Level 1: the four pairs, nothing more.
-    assert(p1.values.toSet.size === 4, p1.toString)
-    for (pair <- Seq(Set(1L, 2L), Set(3L, 4L), Set(5L, 6L), Set(7L, 8L)))
-      assert(pair.map(p1).size === 1, p1.toString)
-    val p2 = GraphOps.louvainTwoLevelLabels(g, 2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // Level 2: the two chained groups, bridge left between them.
-    assert(Set(1L, 2L, 3L, 4L).map(p2).size === 1, p2.toString)
-    assert(Set(5L, 6L, 7L, 8L).map(p2).size === 1, p2.toString)
-    assert(p2(1L) !== p2(5L), p2.toString)
-    // And the ascent is real: the two-level partition's weighted Q
-    // strictly beats the one-level one on the same graph.
-    def q(lbl: Map[Long, Long]): Long = {
-      val lblDf = spark.createDataFrame(lbl.toSeq).toDF("n", "com")
-      GraphOps.modularityCensusWeighted(g, lblDf)
-        .filter($"com" === -1L).head.getAs[Long]("contribution_ppm")
+    graft.Frames.scoped { f =>
+      import graft.queries.GraphOps
+      import spark.implicits._
+      // Four heavy pairs chained by medium ties into two natural groups,
+      // with a weight-1 bridge between the groups: level 1 can only form
+      // the pairs (any single node leaving its support-10 partner loses
+      // more than a support-8 tie gains), but moving a WHOLE pair across
+      // a tie is Q-positive — exactly the move contraction unlocks.
+      val g = spark.createDataFrame(Seq(
+        (1L, 2L, 10L), (3L, 4L, 10L), (5L, 6L, 10L), (7L, 8L, 10L),
+        (2L, 3L, 8L), (6L, 7L, 8L), (4L, 5L, 1L)))
+        .toDF("u", "v", "sup")
+      val p1 = GraphOps.louvainRoundsWeighted(f, g, 4)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // Level 1: the four pairs, nothing more.
+      assert(p1.values.toSet.size === 4, p1.toString)
+      for (pair <- Seq(Set(1L, 2L), Set(3L, 4L), Set(5L, 6L), Set(7L, 8L)))
+        assert(pair.map(p1).size === 1, p1.toString)
+      val p2 = GraphOps.louvainTwoLevelLabels(f, g, 2)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // Level 2: the two chained groups, bridge left between them.
+      assert(Set(1L, 2L, 3L, 4L).map(p2).size === 1, p2.toString)
+      assert(Set(5L, 6L, 7L, 8L).map(p2).size === 1, p2.toString)
+      assert(p2(1L) !== p2(5L), p2.toString)
+      // And the ascent is real: the two-level partition's weighted Q
+      // strictly beats the one-level one on the same graph.
+      def q(lbl: Map[Long, Long]): Long = {
+        val lblDf = spark.createDataFrame(lbl.toSeq).toDF("n", "com")
+        GraphOps.modularityCensusWeighted(g, lblDf)
+          .filter($"com" === -1L).head.getAs[Long]("contribution_ppm")
+      }
+      val (q1, q2) = (q(p1), q(p2))
+      assert(q2 > q1, s"two-level Q $q2 does not beat one-level Q $q1")
     }
-    val (q1, q2) = (q(p1), q(p2))
-    assert(q2 > q1, s"two-level Q $q2 does not beat one-level Q $q1")
   }
 
   test("star contraction ≡ min-label propagation on a multi-component graph") {
-    import graft.queries.GraphOps
-    // Three components of different shapes: a 5-cycle, a star, and an
-    // edge — plus ids deliberately out of order so the minimum is not
-    // the first node written.
-    val g = spark.createDataFrame(Seq(
-      (10L, 7L), (7L, 12L), (12L, 9L), (9L, 14L), (14L, 10L),
-      (21L, 25L), (21L, 23L), (21L, 27L),
-      (31L, 30L))).toDF("u", "v")
-    val star = GraphOps.starContractLabels(g)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val prop = GraphOps.minLabel(g.select(col("u").as("src"), col("v").as("dst")))
-    val propM = prop.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    prop.unpersist(blocking = false)
-    assert(star === propM, s"star=$star prop=$propM")
-    assert(star.values.toSet === Set(7L, 21L, 30L), star.toString)
+    graft.Frames.scoped { f =>
+      import graft.queries.GraphOps
+      // Three components of different shapes: a 5-cycle, a star, and an
+      // edge — plus ids deliberately out of order so the minimum is not
+      // the first node written.
+      val g = spark.createDataFrame(Seq(
+        (10L, 7L), (7L, 12L), (12L, 9L), (9L, 14L), (14L, 10L),
+        (21L, 25L), (21L, 23L), (21L, 27L),
+        (31L, 30L))).toDF("u", "v")
+      val star = GraphOps.starContractLabels(f, g)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val prop = GraphOps.minLabel(f, g.select(col("u").as("src"), col("v").as("dst")))
+      val propM = prop.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      prop.unpersist(blocking = false)
+      assert(star === propM, s"star=$star prop=$propM")
+      assert(star.values.toSet === Set(7L, 21L, 30L), star.toString)
+    }
   }
 
   test("star contraction beats the diameter wall: a 200-node path converges inside the cap") {
-    import graft.queries.GraphOps
-    import spark.implicits._
-    // Plain min-label propagation moves the minimum ONE hop per round —
-    // a diameter-199 path needs ~200 rounds, far past the MaxIters=25
-    // guard both loops share. Star contraction halves path lengths
-    // every pair of rounds, so the same graph converges in a handful.
-    val path = spark.range(1, 200)
-      .select($"id".as("u"), ($"id" + 1).as("v"))
-    val lbl = GraphOps.starContractLabels(path)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(lbl.size === 200)
-    assert(lbl.values.forall(_ == 1L),
-      s"non-min labels survive: ${lbl.filter(_._2 != 1L)}")
-    // And the propagation loop indeed cannot do this one.
-    val thrown = intercept[Exception] {
-      GraphOps.minLabel(path.select($"u".as("src"), $"v".as("dst"))).collect()
+    graft.Frames.scoped { f =>
+      import graft.queries.GraphOps
+      import spark.implicits._
+      // Plain min-label propagation moves the minimum ONE hop per round —
+      // a diameter-199 path needs ~200 rounds, far past the MaxIters=25
+      // guard both loops share. Star contraction halves path lengths
+      // every pair of rounds, so the same graph converges in a handful.
+      val path = spark.range(1, 200)
+        .select($"id".as("u"), ($"id" + 1).as("v"))
+      val lbl = GraphOps.starContractLabels(f, path)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(lbl.size === 200)
+      assert(lbl.values.forall(_ == 1L),
+        s"non-min labels survive: ${lbl.filter(_._2 != 1L)}")
+      // And the propagation loop indeed cannot do this one.
+      val thrown = intercept[Exception] {
+        GraphOps.minLabel(f, path.select($"u".as("src"), $"v".as("dst"))).collect()
+      }
+      assert(thrown.getMessage.contains("did not converge"), thrown.getMessage)
     }
-    assert(thrown.getMessage.contains("did not converge"), thrown.getMessage)
   }
 
   test("census compaction: kill MID-COMMIT converges — folded deletes done, generation still staged") {

@@ -19,48 +19,54 @@ import graft.streaming.{StoreCompaction, StreamBm25Maintain, StreamChunkStore,
 class Round12EdgeSpec extends SparkTestBase {
 
   test("louvain short-circuit: a single edge converges in 3 sweeps, not the budget") {
-    import spark.implicits._
-    // Nodes 1 and 2, one edge. Sweep 1 (parity 1) merges node 1 into
-    // community 2; sweeps 2 and 3 move nothing (each parity class in
-    // turn finds "stay" optimal) — two consecutive quiet sweeps prove
-    // the fixed point, so an 8-sweep budget must execute exactly 3.
-    val g = Seq((1L, 2L)).toDF("u", "v")
-    val (com, executed) = graft.queries.GraphOps.louvainRoundsCounted(g, 8)
-    assert(executed === 3, s"expected 3 executed sweeps, got $executed")
-    val labels = com.orderBy($"n").as[(Long, Long)].collect().toSeq
-    assert(labels === Seq((1L, 2L), (2L, 2L)), labels.mkString(","))
+    graft.Frames.scoped { f =>
+      import spark.implicits._
+      // Nodes 1 and 2, one edge. Sweep 1 (parity 1) merges node 1 into
+      // community 2; sweeps 2 and 3 move nothing (each parity class in
+      // turn finds "stay" optimal) — two consecutive quiet sweeps prove
+      // the fixed point, so an 8-sweep budget must execute exactly 3.
+      val g = Seq((1L, 2L)).toDF("u", "v")
+      val (com, executed) = graft.queries.GraphOps.louvainRoundsCounted(f, g, 8)
+      assert(executed === 3, s"expected 3 executed sweeps, got $executed")
+      val labels = com.orderBy($"n").as[(Long, Long)].collect().toSeq
+      assert(labels === Seq((1L, 2L), (2L, 2L)), labels.mkString(","))
+    }
   }
 
   test("louvain short-circuit (weighted): same fixpoint, same labels, 3 sweeps") {
-    import spark.implicits._
-    val gw = Seq((1L, 2L, 5L)).toDF("u", "v", "sup")
-    val (com, executed) =
-      graft.queries.GraphOps.louvainRoundsWeightedCounted(gw, 8)
-    assert(executed === 3, s"expected 3 executed sweeps, got $executed")
-    val labels = com.orderBy($"n").as[(Long, Long)].collect().toSeq
-    assert(labels === Seq((1L, 2L), (2L, 2L)), labels.mkString(","))
+    graft.Frames.scoped { f =>
+      import spark.implicits._
+      val gw = Seq((1L, 2L, 5L)).toDF("u", "v", "sup")
+      val (com, executed) =
+        graft.queries.GraphOps.louvainRoundsWeightedCounted(f, gw, 8)
+      assert(executed === 3, s"expected 3 executed sweeps, got $executed")
+      val labels = com.orderBy($"n").as[(Long, Long)].collect().toSeq
+      assert(labels === Seq((1L, 2L), (2L, 2L)), labels.mkString(","))
+    }
   }
 
   test("louvain short-circuit is result-invariant: early stop equals the full unrolled budget") {
-    import spark.implicits._
-    // A graph busy enough that the first sweeps move: two triangles
-    // joined by a bridge. The short-circuited run (budget 8) must
-    // produce byte-identical labels to budget-3 and budget-4 runs —
-    // the identity-sweep argument the oracles rely on (they always
-    // unroll the full budget).
-    val g = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L),
-      (4L, 5L), (5L, 6L), (4L, 6L)).toDF("u", "v")
-    def labelsAt(budget: Int): Seq[(Long, Long)] = {
-      val (com, _) = graft.queries.GraphOps.louvainRoundsCounted(g, budget)
-      com.orderBy($"n").as[(Long, Long)].collect().toSeq
-    }
-    val (com8, ex8) = graft.queries.GraphOps.louvainRoundsCounted(g, 8)
-    val l8 = com8.orderBy($"n").as[(Long, Long)].collect().toSeq
-    // However many sweeps the loop decided to pay, the fixed point it
-    // stopped at must equal what the full budget computes: every sweep
-    // from ex8 to 8 is the identity.
-    (ex8 to 8).foreach { b =>
-      assert(labelsAt(b) === l8, s"budget $b diverged from the fixed point")
+    graft.Frames.scoped { f =>
+      import spark.implicits._
+      // A graph busy enough that the first sweeps move: two triangles
+      // joined by a bridge. The short-circuited run (budget 8) must
+      // produce byte-identical labels to budget-3 and budget-4 runs —
+      // the identity-sweep argument the oracles rely on (they always
+      // unroll the full budget).
+      val g = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L),
+        (4L, 5L), (5L, 6L), (4L, 6L)).toDF("u", "v")
+      def labelsAt(budget: Int): Seq[(Long, Long)] = {
+        val (com, _) = graft.queries.GraphOps.louvainRoundsCounted(f, g, budget)
+        com.orderBy($"n").as[(Long, Long)].collect().toSeq
+      }
+      val (com8, ex8) = graft.queries.GraphOps.louvainRoundsCounted(f, g, 8)
+      val l8 = com8.orderBy($"n").as[(Long, Long)].collect().toSeq
+      // However many sweeps the loop decided to pay, the fixed point it
+      // stopped at must equal what the full budget computes: every sweep
+      // from ex8 to 8 is the identity.
+      (ex8 to 8).foreach { b =>
+        assert(labelsAt(b) === l8, s"budget $b diverged from the fixed point")
+      }
     }
   }
 
@@ -95,39 +101,43 @@ class Round12EdgeSpec extends SparkTestBase {
   }
 
   test("q509 leiden on disconnected triangles: two connected communities with exact census") {
-    import spark.implicits._
-    val gw = Seq(
-      (1L, 2L, 10L), (2L, 3L, 10L), (1L, 3L, 10L),
-      (5L, 6L, 10L), (6L, 7L, 10L), (5L, 7L, 10L)).toDF("u", "v", "sup")
-    val labels = graft.queries.GraphOps.leidenTwoLevelLabels(gw, 2)
-    val census = graft.queries.GraphOps.modularityCensusWeighted(gw, labels)
-      .as[(Long, Long, Long, Long, Long)].collect().toSeq
-    // Each triangle: w_in 30, degree mass 60, contribution 250000 ppm;
-    // community ids are component minima (1 and 5).
-    assert(census === Seq(
-      (-1L, 6L, 60L, 120L, 500000L),
-      (1L, 3L, 30L, 60L, 250000L),
-      (5L, 3L, 30L, 60L, 250000L)), census.mkString(","))
+    graft.Frames.scoped { f =>
+      import spark.implicits._
+      val gw = Seq(
+        (1L, 2L, 10L), (2L, 3L, 10L), (1L, 3L, 10L),
+        (5L, 6L, 10L), (6L, 7L, 10L), (5L, 7L, 10L)).toDF("u", "v", "sup")
+      val labels = graft.queries.GraphOps.leidenTwoLevelLabels(f, gw, 2)
+      val census = graft.queries.GraphOps.modularityCensusWeighted(gw, labels)
+        .as[(Long, Long, Long, Long, Long)].collect().toSeq
+      // Each triangle: w_in 30, degree mass 60, contribution 250000 ppm;
+      // community ids are component minima (1 and 5).
+      assert(census === Seq(
+        (-1L, 6L, 60L, 120L, 500000L),
+        (1L, 3L, 30L, 60L, 250000L),
+        (5L, 3L, 30L, 60L, 250000L)), census.mkString(","))
+    }
   }
 
   test("q509 leiden output is internally connected BY CONSTRUCTION: the q508 audit reads all-zeros") {
-    import spark.implicits._
-    // The real projection at sf0.001 — where plain two-level Louvain
-    // (q507) is exactly what q508 catches stranding communities; the
-    // Leiden refinement must leave nothing to report.
-    val edges = graft.queries.GraphOps.tradeEdges(spark, sf)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val gw = graft.queries.GraphOps.basketPairCounts(edges)
-        .filter($"sup" >= 8)
+    graft.Frames.scoped { f =>
+      import spark.implicits._
+      // The real projection at sf0.001 — where plain two-level Louvain
+      // (q507) is exactly what q508 catches stranding communities; the
+      // Leiden refinement must leave nothing to report.
+      val edges = graft.queries.GraphOps.tradeEdges(spark, sf)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val labels = graft.queries.GraphOps.leidenTwoLevelLabels(gw, 2)
-        val audit = graft.queries.GraphOps.louvainConnectivityAudit(gw, labels)
-          .as[(Long, Long, Long, Long, Long)].collect().toSeq
-        assert(audit === Seq((-1L, 0L, 0L, 0L, 0L)), audit.mkString(","))
-      } finally { gw.unpersist(blocking = false); () }
-    } finally { edges.unpersist(blocking = false); () }
+        val gw = graft.queries.GraphOps.basketPairCounts(edges)
+          .filter($"sup" >= 8)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          val labels = graft.queries.GraphOps.leidenTwoLevelLabels(f, gw, 2)
+          val audit = graft.queries.GraphOps.louvainConnectivityAudit(gw, labels)
+            .as[(Long, Long, Long, Long, Long)].collect().toSeq
+          assert(audit === Seq((-1L, 0L, 0L, 0L, 0L)), audit.mkString(","))
+        } finally { gw.unpersist(blocking = false); () }
+      } finally { edges.unpersist(blocking = false); () }
+    }
   }
 
   // ---- StoreCompaction generalization (round-11 verdict ask #3) ----

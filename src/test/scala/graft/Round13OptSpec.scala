@@ -12,7 +12,8 @@ class Round13OptSpec extends SparkTestBase {
 
   test("derivedPartitions scales with the input census and caps at the session width") {
     val session = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val d = graft.streaming.StreamHarnessAccess.derived(spark, _: Long)
+    // The streaming state width: the shared rule at floor 4.
+    val d = graft.Confs.derivedWidth(spark, _: Long, 4)
     // Fixture scale resolves to the floor.
     assert(d(0L) === math.min(session, 4))
     assert(d(60000L) === math.min(session, 4))
@@ -141,16 +142,17 @@ class Round13OptSpec extends SparkTestBase {
   }
 
   test("q493 star-contraction labels equal min-label propagation on the core graph") {
-    import spark.implicits._
-    // Chained components (real diameter) + an isolated edge.
-    val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L),
-      (11L, 12L), (20L, 21L)).toDF("u", "v")
-    val star = graft.queries.GraphOps.starContractLabels(e)
-      .as[(Long, Long)].collect().toSet
-    val prop = graft.queries.GraphOps.minLabel(
-        e.select($"u".as("src"), $"v".as("dst")))
-      .as[(Long, Long)].collect().toSet
-    assert(star === prop)
+    graft.Frames.scoped { f =>
+      import spark.implicits._
+      // Chained components (real diameter) + an isolated edge.
+      val e = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L),
+        (11L, 12L), (20L, 21L)).toDF("u", "v")
+      val star = graft.queries.GraphOps.starContractLabels(f, e)
+        .as[(Long, Long)].collect().toSet
+      val prop = graft.queries.GraphOps.minLabel(f, e.select($"u".as("src"), $"v".as("dst")))
+        .as[(Long, Long)].collect().toSet
+      assert(star === prop)
+    }
   }
 
   // ---- continuation session ----
@@ -183,13 +185,6 @@ class Round13OptSpec extends SparkTestBase {
       assert(spark.read.parquet(files(2).getPath)
         .as[(Long, String)].collect().toSet === Set((3L, "c")))
     } finally graft.Fs.deleteTree(tmp)
-  }
-
-  test("q448's staged HITS chain releases every persisted iterate") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    graft.SparkEntry.queries("q448_hits_authorities")(spark, sf).collect()
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(leaked.isEmpty, s"q448 left persistent RDDs behind: $leaked")
   }
 
   test("the BM25 batch writer releases its persisted postings frame") {

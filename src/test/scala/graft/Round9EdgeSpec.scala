@@ -24,31 +24,37 @@ class Round9EdgeSpec extends SparkTestBase {
   private def k4 = edges((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
 
   test("peel3Core: a path graph (all degrees < 3) empties in round one") {
-    val path = edges((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
-    val (g, removed) = GraphOps.peel3Core(path, 8)
-    assert(g.count() === 0L)
-    assert(removed === 6L) // all six nodes, all in round 1; rounds 2-8 no-op
+    graft.Frames.scoped { f =>
+      val path = edges((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
+      val (g, removed) = GraphOps.peel3Core(f, path, 8)
+      assert(g.count() === 0L)
+      assert(removed === 6L) // all six nodes, all in round 1; rounds 2-8 no-op
+    }
   }
 
   test("peel3Core: a K5 clique is already its own 3-core — nothing removed") {
-    val k5 = edges((for {
-      a <- 1L to 5L; b <- (a + 1) to 5L
-    } yield (a, b)): _*)
-    val (g, removed) = GraphOps.peel3Core(k5, 8)
-    assert(removed === 0L)
-    assert(g.count() === 10L)
+    graft.Frames.scoped { f =>
+      val k5 = edges((for {
+        a <- 1L to 5L; b <- (a + 1) to 5L
+      } yield (a, b)): _*)
+      val (g, removed) = GraphOps.peel3Core(f, k5, 8)
+      assert(removed === 0L)
+      assert(g.count() === 10L)
+    }
   }
 
   test("peel3Core: a pendant chain cascades off while the K4 core survives") {
-    // K4 {1,2,3,4} + chain 4-5-6: round 1 removes 5 (deg 2) and 6
-    // (deg 1); the K4 (all deg 3 after the chain drops) then holds.
-    val g0 = k4.unionAll(edges((4L, 5L), (5L, 6L)))
-    val (g, removed) = GraphOps.peel3Core(g0, 8)
-    assert(removed === 2L)
-    assert(g.count() === 6L)
-    val nodes = g.select("u").unionAll(g.select("v")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    assert(nodes.toSeq === Seq(1L, 2L, 3L, 4L))
+    graft.Frames.scoped { f =>
+      // K4 {1,2,3,4} + chain 4-5-6: round 1 removes 5 (deg 2) and 6
+      // (deg 1); the K4 (all deg 3 after the chain drops) then holds.
+      val g0 = k4.unionAll(edges((4L, 5L), (5L, 6L)))
+      val (g, removed) = GraphOps.peel3Core(f, g0, 8)
+      assert(removed === 2L)
+      assert(g.count() === 6L)
+      val nodes = g.select("u").unionAll(g.select("v")).distinct()
+        .collect().map(_.getLong(0)).sorted
+      assert(nodes.toSeq === Seq(1L, 2L, 3L, 4L))
+    }
   }
 
   test("assortativityStats: a degree-regular cycle reports NULL r, not /0") {
@@ -70,42 +76,46 @@ class Round9EdgeSpec extends SparkTestBase {
   }
 
   test("triangleCensus: K4 — 4 triangles, clustering 1.0, under degree orientation") {
-    val r = GraphOps.triangleCensus(k4).collect().head
-    assert(r.getAs[Long]("n_nodes") === 4L)
-    assert(r.getAs[Long]("n_edges") === 6L)
-    assert(r.getAs[Long]("n_wedges") === 12L)
-    assert(r.getAs[Long]("n_triangles") === 4L)
-    assert(r.getAs[Long]("clustering_ppm") === 1000000L)
+    graft.Frames.scoped { f =>
+      val r = GraphOps.triangleCensus(f, k4).collect().head
+      assert(r.getAs[Long]("n_nodes") === 4L)
+      assert(r.getAs[Long]("n_edges") === 6L)
+      assert(r.getAs[Long]("n_wedges") === 12L)
+      assert(r.getAs[Long]("n_triangles") === 4L)
+      assert(r.getAs[Long]("clustering_ppm") === 1000000L)
+    }
   }
 
   test("triangleCensus: a hub star counts zero triangles; a bowtie hub counts both exactly once") {
-    // Star K1,4: the degree orientation points every edge INTO the hub
-    // (leaves are (deg,id)-smaller), so the two-path join finds nothing —
-    // zero triangles, 6 hub wedges, clustering 0.
-    val star = GraphOps.triangleCensus(
-      edges((0L, 1L), (0L, 2L), (0L, 3L), (0L, 4L))).collect().head
-    assert(star.getAs[Long]("n_triangles") === 0L)
-    assert(star.getAs[Long]("n_wedges") === 6L)
-    assert(star.getAs[Long]("clustering_ppm") === 0L)
-    // Bowtie (two triangles sharing hub 3): each triangle must be
-    // counted exactly once even though the shared node dominates the
-    // degree order. wedges = 6 (hub) + 4×1 = 10 → 6/10.
-    val bow = GraphOps.triangleCensus(
-      edges((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (3L, 5L), (4L, 5L)))
-      .collect().head
-    assert(bow.getAs[Long]("n_triangles") === 2L)
-    assert(bow.getAs[Long]("n_wedges") === 10L)
-    assert(bow.getAs[Long]("clustering_ppm") === 600000L)
+    graft.Frames.scoped { f =>
+      // Star K1,4: the degree orientation points every edge INTO the hub
+      // (leaves are (deg,id)-smaller), so the two-path join finds nothing —
+      // zero triangles, 6 hub wedges, clustering 0.
+      val star = GraphOps.triangleCensus(f, edges((0L, 1L), (0L, 2L), (0L, 3L), (0L, 4L))).collect().head
+      assert(star.getAs[Long]("n_triangles") === 0L)
+      assert(star.getAs[Long]("n_wedges") === 6L)
+      assert(star.getAs[Long]("clustering_ppm") === 0L)
+      // Bowtie (two triangles sharing hub 3): each triangle must be
+      // counted exactly once even though the shared node dominates the
+      // degree order. wedges = 6 (hub) + 4×1 = 10 → 6/10.
+      val bow = GraphOps.triangleCensus(f, edges((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (3L, 5L), (4L, 5L)))
+        .collect().head
+      assert(bow.getAs[Long]("n_triangles") === 2L)
+      assert(bow.getAs[Long]("n_wedges") === 10L)
+      assert(bow.getAs[Long]("clustering_ppm") === 600000L)
+    }
   }
 
   test("propagateLabels: two disjoint cliques converge to their min ids in 4 rounds") {
-    val g = edges((1L, 2L), (1L, 3L), (2L, 3L)) // K3
-      .unionAll(edges((10L, 11L), (10L, 12L), (10L, 13L),
-        (11L, 12L), (11L, 13L), (12L, 13L))) // K4
-    val lbl = GraphOps.propagateLabels(g, 4).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(lbl === Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
-      10L -> 10L, 11L -> 10L, 12L -> 10L, 13L -> 10L))
+    graft.Frames.scoped { f =>
+      val g = edges((1L, 2L), (1L, 3L), (2L, 3L)) // K3
+        .unionAll(edges((10L, 11L), (10L, 12L), (10L, 13L),
+          (11L, 12L), (11L, 13L), (12L, 13L))) // K4
+      val lbl = GraphOps.propagateLabels(f, g, 4).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(lbl === Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
+        10L -> 10L, 11L -> 10L, 12L -> 10L, 13L -> 10L))
+    }
   }
 
   test("q484: BM25 CDC maintainer killed mid-stream + restarted answers exactly-once") {
@@ -129,75 +139,82 @@ class Round9EdgeSpec extends SparkTestBase {
   }
 
   test("commonNeighborStrength: isolated edge NULL, bridge 0, triangle edge 1e6") {
-    // Triangle {1,2,3} + bridge 3-10 + isolated edge 20-21.
-    val g = edges((1L, 2L), (1L, 3L), (2L, 3L), (3L, 10L), (20L, 21L))
-    val rows = GraphOps.commonNeighborStrength(g).collect()
-      .map(r => (r.getAs[Long]("u"), r.getAs[Long]("v")) -> r).toMap
-    val tri = rows((1L, 2L))
-    assert(tri.getAs[Long]("cn") === 1L)
-    assert(tri.getAs[Long]("jaccard_ppm") === 1000000L)
-    val bridge = rows((3L, 10L))
-    assert(bridge.getAs[Long]("cn") === 0L)
-    assert(bridge.getAs[Long]("jaccard_ppm") === 0L)
-    val iso = rows((20L, 21L))
-    assert(iso.getAs[Long]("cn") === 0L)
-    // du + dv - 2 - cn = 0: Jaccard undefined — NULL, not /0.
-    assert(iso.isNullAt(iso.fieldIndex("jaccard_ppm")), iso.toString)
+    graft.Frames.scoped { f =>
+      // Triangle {1,2,3} + bridge 3-10 + isolated edge 20-21.
+      val g = edges((1L, 2L), (1L, 3L), (2L, 3L), (3L, 10L), (20L, 21L))
+      val rows = GraphOps.commonNeighborStrength(f, g).collect()
+        .map(r => (r.getAs[Long]("u"), r.getAs[Long]("v")) -> r).toMap
+      val tri = rows((1L, 2L))
+      assert(tri.getAs[Long]("cn") === 1L)
+      assert(tri.getAs[Long]("jaccard_ppm") === 1000000L)
+      val bridge = rows((3L, 10L))
+      assert(bridge.getAs[Long]("cn") === 0L)
+      assert(bridge.getAs[Long]("jaccard_ppm") === 0L)
+      val iso = rows((20L, 21L))
+      assert(iso.getAs[Long]("cn") === 0L)
+      // du + dv - 2 - cn = 0: Jaccard undefined — NULL, not /0.
+      assert(iso.isNullAt(iso.fieldIndex("jaccard_ppm")), iso.toString)
+    }
   }
 
   test("trussPeel: K4 is its own 4-truss; a bowtie dissolves; weak appendages cascade off") {
-    // K4: every edge carries exactly 2 triangles — stable.
-    val (gK4, rK4) = GraphOps.trussPeel(k4, 4)
-    assert(rK4 === 0L)
-    assert(gK4.count() === 6L)
-    // Bowtie: every edge carries exactly ONE triangle — all 6 edges
-    // peel in round one (4-truss needs >= 2).
-    val bow = edges((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (3L, 5L), (4L, 5L))
-    val (gBow, rBow) = GraphOps.trussPeel(bow, 4)
-    assert(rBow === 6L)
-    assert(gBow.count() === 0L)
-    // K4 + a pendant wedge through node 10: the two wedge edges carry
-    // one triangle each and peel; the K4 survives untouched.
-    val (gMix, rMix) = GraphOps.trussPeel(
-      k4.unionAll(edges((1L, 10L), (2L, 10L))), 4)
-    assert(rMix === 2L)
-    assert(gMix.count() === 6L)
+    graft.Frames.scoped { f =>
+      // K4: every edge carries exactly 2 triangles — stable.
+      val (gK4, rK4) = GraphOps.trussPeel(f, k4, 4)
+      assert(rK4 === 0L)
+      assert(gK4.count() === 6L)
+      // Bowtie: every edge carries exactly ONE triangle — all 6 edges
+      // peel in round one (4-truss needs >= 2).
+      val bow = edges((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (3L, 5L), (4L, 5L))
+      val (gBow, rBow) = GraphOps.trussPeel(f, bow, 4)
+      assert(rBow === 6L)
+      assert(gBow.count() === 0L)
+      // K4 + a pendant wedge through node 10: the two wedge edges carry
+      // one triangle each and peel; the K4 survives untouched.
+      val (gMix, rMix) = GraphOps.trussPeel(f, k4.unionAll(edges((1L, 10L), (2L, 10L))), 4)
+      assert(rMix === 2L)
+      assert(gMix.count() === 6L)
+    }
   }
 
   test("trussPeel: a triangle strip cascades over two rounds; rounds=1 stops mid-peel") {
-    // Strip T1={1,2,3}, T2={2,3,4}, T3={3,4,5}: the five rim edges
-    // carry one triangle each and peel in round 1; the two spine edges
-    // (2,3) and (3,4) start at support 2 and must be decremented to 0
-    // by the incremental maintenance (both their triangles died), then
-    // peel in round 2.
-    val strip = edges((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L),
-      (3L, 5L), (4L, 5L))
-    val (g2, r2) = GraphOps.trussPeel(strip, 4)
-    assert(r2 === 7L)
-    assert(g2.count() === 0L)
-    // Bounded rounds stop mid-cascade: after one round only the two
-    // spine edges remain (the oracle's fixed-round unroll semantics).
-    val (g1, r1) = GraphOps.trussPeel(strip, 1)
-    assert(r1 === 5L)
-    val rest = g1.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
-    assert(rest.toSeq === Seq((2L, 3L), (3L, 4L)))
+    graft.Frames.scoped { f =>
+      // Strip T1={1,2,3}, T2={2,3,4}, T3={3,4,5}: the five rim edges
+      // carry one triangle each and peel in round 1; the two spine edges
+      // (2,3) and (3,4) start at support 2 and must be decremented to 0
+      // by the incremental maintenance (both their triangles died), then
+      // peel in round 2.
+      val strip = edges((1L, 2L), (1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L),
+        (3L, 5L), (4L, 5L))
+      val (g2, r2) = GraphOps.trussPeel(f, strip, 4)
+      assert(r2 === 7L)
+      assert(g2.count() === 0L)
+      // Bounded rounds stop mid-cascade: after one round only the two
+      // spine edges remain (the oracle's fixed-round unroll semantics).
+      val (g1, r1) = GraphOps.trussPeel(f, strip, 1)
+      assert(r1 === 5L)
+      val rest = g1.collect().map(r => (r.getLong(0), r.getLong(1))).sorted
+      assert(rest.toSeq === Seq((2L, 3L), (3L, 4L)))
+    }
   }
 
   test("trussPeel: a triangle dying through TWO victims decrements its survivor ONCE") {
-    // K4 {1,2,4,5} + appendage triangle {1,2,3} whose side edges (1,3)
-    // and (2,3) are both victims: edge (1,2) starts at support 3 and
-    // loses the {1,2,3} triangle exactly once (the id-sorted distinct
-    // in trussPeel) — support 2, K4 stable, nothing else peels. A
-    // per-victim double count would push (1,2) to 1 and dissolve the
-    // whole K4 in the next round.
-    val g0 = edges((1L, 2L), (1L, 4L), (1L, 5L), (2L, 4L), (2L, 5L),
-      (4L, 5L), (1L, 3L), (2L, 3L))
-    val (g, removed) = GraphOps.trussPeel(g0, 4)
-    assert(removed === 2L)
-    assert(g.count() === 6L)
-    val nodes = g.select("u").unionAll(g.select("v")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    assert(nodes.toSeq === Seq(1L, 2L, 4L, 5L))
+    graft.Frames.scoped { f =>
+      // K4 {1,2,4,5} + appendage triangle {1,2,3} whose side edges (1,3)
+      // and (2,3) are both victims: edge (1,2) starts at support 3 and
+      // loses the {1,2,3} triangle exactly once (the id-sorted distinct
+      // in trussPeel) — support 2, K4 stable, nothing else peels. A
+      // per-victim double count would push (1,2) to 1 and dissolve the
+      // whole K4 in the next round.
+      val g0 = edges((1L, 2L), (1L, 4L), (1L, 5L), (2L, 4L), (2L, 5L),
+        (4L, 5L), (1L, 3L), (2L, 3L))
+      val (g, removed) = GraphOps.trussPeel(f, g0, 4)
+      assert(removed === 2L)
+      assert(g.count() === 6L)
+      val nodes = g.select("u").unionAll(g.select("v")).distinct()
+        .collect().map(_.getLong(0)).sorted
+      assert(nodes.toSeq === Seq(1L, 2L, 4L, 5L))
+    }
   }
 
   test("q491: a zero-length doc counts as a doc but contributes no chunks") {

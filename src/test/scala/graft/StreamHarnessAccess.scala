@@ -1,13 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-
 /** Test-scope accessor: StreamHarness is private[streaming], but
-  * Round13OptSpec pins the derived state-width rule. */
+  * Round13OptSpec drives its feed staging. */
 object StreamHarnessAccess {
-  def derived(spark: SparkSession, rows: Long): Int =
-    StreamHarness.derivedPartitions(spark, rows)
-
   def stageFeed(inDir: String, stageRoot: String,
       feed: Seq[(String, org.apache.spark.sql.DataFrame)]): Unit =
     StreamHarness.stageFeedFiles(inDir, stageRoot, feed)

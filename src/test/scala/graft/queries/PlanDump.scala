@@ -176,7 +176,9 @@ object PlanDump {
     val g = spark.range(0, 40)
       .select((col("id") % 10).as("u"), ((col("id") + 3) % 10).as("v"))
       .filter(col("u") < col("v")).distinct().localCheckpoint()
-    dump("edge_support", planOf(GraphOps.edgeSupport(g), noAutoBroadcast = false))
+    graft.Frames.scoped { f =>
+      dump("edge_support", planOf(GraphOps.edgeSupport(f, g), noAutoBroadcast = false))
+    }
 
     spark.stop()
   }

@@ -188,14 +188,15 @@ object PlanDumpR13 {
       }
       locally { // AFTER: the shipped fused pass + checkpointed reuse
         val merged = planOf(GraphOps.louvainContractMerged(gw, p1, mb))
-        val (e2, str2, m) = GraphOps.louvainContract(gw, p1, mb)
-        val bi2 = e2.select($"u".as("src"), $"v".as("dst"), $"sup".as("w"))
-          .unionAll(e2.select($"v".as("src"), $"u".as("dst"), $"sup".as("w")))
-        dump("louvain_contract_after",
-          "== fused pass (louvainContractMerged, checkpointed once) ==\n" + merged +
-            "\n== str2 (reads the checkpoint) ==\n" + planOf(str2) +
-            "\n== bi2 (reads the checkpoint) ==\n" + planOf(bi2))
-        m.unpersist(blocking = false)
+        graft.Frames.scoped { f =>
+          val (e2, str2) = GraphOps.louvainContract(f, gw, p1, mb)
+          val bi2 = e2.select($"u".as("src"), $"v".as("dst"), $"sup".as("w"))
+            .unionAll(e2.select($"v".as("src"), $"u".as("dst"), $"sup".as("w")))
+          dump("louvain_contract_after",
+            "== fused pass (louvainContractMerged, checkpointed once) ==\n" + merged +
+              "\n== str2 (reads the checkpoint) ==\n" + planOf(str2) +
+              "\n== bi2 (reads the checkpoint) ==\n" + planOf(bi2))
+        }
       }
     }
 
@@ -257,7 +258,7 @@ object PlanDumpR13 {
         planOf(spark.sql(sql))
       })
       dump("q103_after", graft.Confs.withShufflePartitions(spark,
-          GraphOps.loopWidth(spark, quarters.count())) {
+          graft.Confs.derivedWidth(spark, quarters.count(), 8)) {
         planOf(spark.sql(sql))
       })
     }
@@ -286,10 +287,8 @@ object PlanDumpR13 {
         dump("q448_hits_before",
           planOf(a2n.orderBy($"authority_ppm".desc, $"s_suppkey").limit(10)))
       }
-      locally { // AFTER: the shipped staged chain
-        val (res, release) = GraphOps.hitsAuthoritiesStaged(edges)
-        dump("q448_hits_after", planOf(res))
-        release()
+      graft.Frames.scoped { f => // AFTER: the shipped staged chain
+        dump("q448_hits_after", planOf(GraphOps.hitsAuthorities(f, edges)))
       }
       edges.unpersist(blocking = false)
     }
