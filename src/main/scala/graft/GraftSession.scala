@@ -45,5 +45,15 @@ object GraftSession {
         // (etag/content-md5) covers transport corruption, and at 100 TB
         // feed rates the extra PUT per state file is real money.
         .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+        // Generated-class cache: Spark keeps 100 compiled classes by
+        // default, but one call of an iterative query compiles more
+        // (q495 ~160, q507 ~280, q509 ~500), so every later call misses
+        // the LRU and recompiles nearly all of them (q495 at sf0.01:
+        // ~150 compiles and ~4 s of executor time per warm call, 2
+        // compiles at 4000). A static conf: CodeGenerator reads it once
+        // when its cache is built, so it must be set here; conf.set and
+        // Confs.withConf cannot change it later. 4000 holds a full
+        // 509-query run's worth of generated classes.
+        .config("spark.sql.codegen.cache.maxEntries", "4000")
         .config("spark.sql.extensions", "graft.functions.GraftExtensions"))
 }

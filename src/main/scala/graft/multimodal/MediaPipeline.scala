@@ -1,7 +1,6 @@
 package graft.multimodal
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing (driver north-star; SURVEY §2.3): media
   * payloads travel as opaque BINARY columns with typed metadata, and the

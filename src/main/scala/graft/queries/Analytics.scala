@@ -3510,8 +3510,6 @@ object Analytics {
     "q339_interarrival_dispersion",
     (s, d) => {
       import s.implicits._
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy($"event_type").orderBy($"ts", $"event_id")
       Tables.events(s, d)
         .select($"event_type", $"ts", $"event_id")
         .withColumn("gap_s",

@@ -406,8 +406,6 @@ object Search {
           .agg(count(lit(1)).as("tf"))
         def stats(post: DataFrame) = post.groupBy($"term")
           .agg(count(lit(1)).as("df"), sum($"tf").as("ctf"))
-        def globals(epoch: DataFrame) = epoch
-          .agg(count(lit(1)).as("n_docs"), sum($"dl").as("len_sum"))
         // r13: stats(postings(eX)) re-ran the tokenize+explode+aggregate
         // of its epoch from scratch — persist the two postings frames
         // (doc×term rows, no token arrays) and serve the globals epochs
@@ -929,8 +927,6 @@ object Search {
           .withColumn("tb", pmod(xxhash64($"term"), lit(NB)))
         def stats(post: DataFrame) = post.groupBy($"term")
           .agg(count(lit(1)).cast("long").as("df"))
-        def globals(e: DataFrame) = e
-          .agg(count(lit(1)).as("n_docs"), sum($"dl").as("len_sum"))
         // r13: with lazy lineage every stats(postings(eX)) re-tokenized
         // its corpus slice from scratch — nine tokenize+explode passes
         // per run. Persist the three postings frames (doc×term rows, no

@@ -275,7 +275,6 @@ object TextMedia {
   val q36 = QuerySpec(
     "q36_multimodal_decode_features",
     (s, d) => {
-      import s.implicits._
       import graft.multimodal.MediaPipeline
       val perMedia = MediaPipeline
         .extractFeatures(MediaPipeline.documentsAsMedia(s, d)).toDF()

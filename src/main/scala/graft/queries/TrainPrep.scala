@@ -1478,7 +1478,6 @@ object TrainPrep {
     "q501_incremental_kmeans_update",
     (s, d) => graft.Frames.scoped { f =>
       import s.implicits._
-      import org.apache.spark.sql.expressions.Window
       val long = f.persist(Tables.fanOut(Tables.embeddings(s, d), col("vec_id"))
         .select($"vec_id", posexplode($"embedding").as(Seq("dim", "xf")))
         .select($"vec_id", $"dim", $"xf".cast("double").as("x")))

@@ -3,7 +3,6 @@ package graft.streaming
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TTLConfig, TimerValues, ValueState}
 
 /** Per-user running totals via `transformWithState` — Spark 4's
