@@ -26,12 +26,13 @@ object Bench {
     // and warm (steady state — the number that scales to a long-running
     // cluster, where planning amortizes to nothing against 100 TB of
     // IO). Since the session's codegen cache holds 4000 classes
-    // (GraftSession), a cold run also reuses every generated class an
-    // EARLIER query compiled with the same source; with Spark's default
-    // 100 it reused almost none. So cold totals from before that change
-    // are not like-for-like: part of the cold drop is class reuse
-    // across queries, not a faster engine. compiles_cold in the detail
-    // line says how much each cold run still compiled.
+    // (GraftSession), a cold run can also reuse generated classes an
+    // EARLIER query compiled from the same source, if the LRU has not
+    // evicted them; with Spark's default 100 it reused almost none.
+    // So cold totals from before that change are not like-for-like:
+    // part of the cold drop is class reuse across queries, not a faster
+    // engine. compiles_cold in the detail line says how much each cold
+    // run still compiled.
     // A failed query must not masquerade as a fast one: a heavy query
     // that starts failing FAST would otherwise LOWER the baseline-
     // compared total, making a regression read as an improvement. So the

@@ -52,8 +52,11 @@ object GraftSession {
         // ~150 compiles and ~4 s of executor time per warm call, 2
         // compiles at 4000). A static conf: CodeGenerator reads it once
         // when its cache is built, so it must be set here; conf.set and
-        // Confs.withConf cannot change it later. 4000 holds a full
-        // 509-query run's worth of generated classes.
+        // Confs.withConf cannot change it later. Sized so each query's
+        // classes survive from one call to the next: q509 compiles ~500
+        // per call, and 4000 keeps them from its cold run to its warm
+        // run even with other queries' classes in between. A full
+        // 509-query run compiles more than 4000, so the LRU still evicts.
         .config("spark.sql.codegen.cache.maxEntries", "4000")
         .config("spark.sql.extensions", "graft.functions.GraftExtensions"))
 }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.Frames
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dedup cluster resolution (SURVEY §2.3 Tier C): near-dup pair lists
@@ -1462,12 +1462,7 @@ object GraphOps {
     val mVal = g.count()
     val bi = f.checkpoint(g.select($"u".as("src"), $"v".as("dst"))
       .unionAll(g.select($"v".as("src"), $"u".as("dst"))))
-    // m rides deg as a column rather than a literal in the sweep's
-    // score: a literal is inlined into the generated source, so every
-    // graph (and each level of a multi-level run) would compile its own
-    // sweep classes; as data, all graphs share them.
-    val deg = f.checkpoint(bi.groupBy($"src".as("n")).agg(count(lit(1)).as("kn"))
-      .withColumn("m", lit(mVal)))
+    val deg = f.checkpoint(bi.groupBy($"src".as("n")).agg(count(lit(1)).as("kn")))
     // Node census once (the checkpoint is already materialized, so this
     // count is metadata-cheap) — gates every sweep's side-frame
     // broadcast below AND sizes the loop's exchange width (r12): a
@@ -1480,7 +1475,7 @@ object GraphOps {
         graft.Confs.derivedWidth(g.sparkSession, nNodes, 8)) {
       louvainLoop(f, rounds,
         f.checkpoint(deg.select($"n", $"n".as("com"))),
-        (com, r) => louvainSweep(bi, deg, com, r, mb))
+        (com, r) => louvainSweep(bi, deg, com, mVal, r, mb))
     }
     f.release(bi, deg)
     out
@@ -1539,12 +1534,12 @@ object GraphOps {
     * the resting parity class) — [[louvainLoop]]'s fixpoint probe
     * reads the flag off the materialized checkpoint instead of paying
     * a separate join-against-previous job per sweep. Every node-sized
-    * side frame (deg as (n, kn, m), Σtot, current labels — tot is
-    * community-sized, ≤ nodes) joins through `mb` (q126's rank-frame
-    * discipline gated on the node census — past [[BroadcastRowCap]]
-    * these joins shuffle instead of flooding the driver), INCLUDING
-    * the label frame the knc census attaches to the edge list: below
-    * the cap the edge frame is never pre-shuffled.
+    * side frame (deg, Σtot, current labels — tot is community-sized,
+    * ≤ nodes) joins through `mb` (q126's rank-frame discipline gated
+    * on the node census — past [[BroadcastRowCap]] these joins shuffle
+    * instead of flooding the driver), INCLUDING the label frame the
+    * knc census attaches to the edge list: below the cap the edge
+    * frame is never pre-shuffled.
     *
     * r12 optimization (guide §2.3/§2.4), oracle-equivalence argued
     * term by term:
@@ -1570,7 +1565,7 @@ object GraphOps {
     *    candidate-merge exchange and the window sort are gone. */
   private[graft] def louvainSweep(bi: org.apache.spark.sql.DataFrame,
       deg: org.apache.spark.sql.DataFrame, com: org.apache.spark.sql.DataFrame,
-      r: Int,
+      mVal: Long, r: Int,
       mb: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     import bi.sparkSession.implicits._
@@ -1594,7 +1589,7 @@ object GraphOps {
       .join(mb(tot), Seq("com"))
       .join(mb(com.select($"n", $"com".as("cur"))), Seq("n"))
       .withColumn("score",
-        expr("2L * m * k - (tot - CASE WHEN com = cur THEN kn ELSE 0L END) * kn"))
+        expr(s"2L * ${mVal}L * k - (tot - CASE WHEN com = cur THEN kn ELSE 0L END) * kn"))
       .groupBy($"n")
       .agg(max(struct($"score", negate($"com").as("nc"))).as("best"),
         min($"cur").as("cur"))
@@ -1790,11 +1785,10 @@ object GraphOps {
     * DECIMAL(20,0)×BIGINT → exact DECIMAL(38,0), mirrored by HUGEINT
     * in the oracle — identical exact-integer ordering). Same parity
     * eligibility, same smallest-community tie, same gated broadcasts.
-    * `bi` carries (src, dst, w); `str` is the strength frame (n, kn,
-    * w2), w2 = 2W from [[twoW]]. */
+    * `bi` carries (src, dst, w); `str` is the strength frame (n, kn). */
   private[graft] def louvainSweepWeighted(bi: org.apache.spark.sql.DataFrame,
       str: org.apache.spark.sql.DataFrame, com: org.apache.spark.sql.DataFrame,
-      r: Int,
+      wTot: Long, r: Int,
       mb: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     import bi.sparkSession.implicits._
@@ -1818,7 +1812,7 @@ object GraphOps {
       .join(mb(tot), Seq("com"))
       .join(mb(com.select($"n", $"com".as("cur"))), Seq("n"))
       .withColumn("score",
-        expr("w2 * k" +
+        expr(s"CAST(2 * ${wTot}L AS DECIMAL(20,0)) * k" +
           " - CAST(tot - CASE WHEN com = cur THEN kn ELSE 0L END AS DECIMAL(20,0)) * kn"))
       .groupBy($"n")
       .agg(max(struct($"score", negate($"com").as("nc"))).as("best"),
@@ -1829,15 +1823,6 @@ object GraphOps {
       .select($"n", $"com", lit(false).as("chg"))
       .unionByName(moved)
   }
-
-  /** 2W as the DECIMAL(20,0) column `w2` the weighted sweep's score
-    * multiplies by, carried on the strength frame for the same reason
-    * deg carries m in [[louvainRoundsCounted]]: the sweep's generated
-    * source must not depend on the graph. Constant-folded to a decimal
-    * literal, which codegen passes by reference rather than as source
-    * text, so the strength checkpoint's own class is shared too. */
-  private def twoW(wTot: Long): Column =
-    expr(s"CAST(2 * ${wTot}L AS DECIMAL(20,0))")
 
   /** q504's ascent loop, factored for edge tests: `rounds` weighted
     * parity sweeps over a weighted undirected edge frame `gw(u, v,
@@ -1860,8 +1845,7 @@ object GraphOps {
     }
     val bi = f.checkpoint(gw.select($"u".as("src"), $"v".as("dst"), $"sup".as("w"))
       .unionAll(gw.select($"v".as("src"), $"u".as("dst"), $"sup".as("w"))))
-    val str = f.checkpoint(bi.groupBy($"src".as("n")).agg(sum($"w").as("kn"))
-      .withColumn("w2", twoW(wTot)))
+    val str = f.checkpoint(bi.groupBy($"src".as("n")).agg(sum($"w").as("kn")))
     val nNodes = str.count()
     val mb = maybeBroadcast(nNodes)
     // r12: loop exchanges sized to the node census (see
@@ -1870,7 +1854,7 @@ object GraphOps {
         graft.Confs.derivedWidth(gw.sparkSession, nNodes, 8)) {
       louvainLoop(f, rounds,
         f.checkpoint(str.select($"n", $"n".as("com"))),
-        (com, r) => louvainSweepWeighted(bi, str, com, r, mb))
+        (com, r) => louvainSweepWeighted(bi, str, com, wTot, r, mb))
     }
     f.release(bi, str)
     out
@@ -2068,15 +2052,14 @@ object GraphOps {
   }
 
   /** The level-2 inputs of q507/q509: [[louvainContract]]'s strength
-    * frame with the level-1 total's w2 column (the level-2 sweep's
-    * 2W, see [[twoW]]) and bidirected super-edge frame (src, dst, w), both
+    * frame and bidirected super-edge frame (src, dst, w), both
     * checkpointed in `f`. The fused pass under them is dead once both
     * are materialized, so it lives in a scope of its own. */
-  private def superGraph(f: Frames, gw: DataFrame, p1: DataFrame, wTot: Long,
+  private def superGraph(f: Frames, gw: DataFrame, p1: DataFrame,
       mb: DataFrame => DataFrame): (DataFrame, DataFrame) = Frames.scoped { pass =>
     import gw.sparkSession.implicits._
     val (e2, str2raw) = louvainContract(pass, gw, p1, mb)
-    val str2 = f.checkpoint(str2raw.withColumn("w2", twoW(wTot)))
+    val str2 = f.checkpoint(str2raw)
     val bi2 = f.checkpoint(e2.select($"u".as("src"), $"v".as("dst"), $"sup".as("w"))
       .unionAll(e2.select($"v".as("src"), $"u".as("dst"), $"sup".as("w"))))
     (bi2, str2)
@@ -2131,7 +2114,7 @@ object GraphOps {
     // (both contraction label legs + the compose).
     val p1rk = f.checkpoint(p1.join(mb(rt), $"com" === $"c1")
       .select($"n", $"rk".as("com")))
-    val (bi2, str2) = superGraph(f, gw, p1rk, wTot, mb)
+    val (bi2, str2) = superGraph(f, gw, p1rk, mb)
     // r12: the level-2 loop runs over |communities|-sized frames —
     // its exchanges ride the node-census-derived width (the
     // contraction above keeps the session width, its aggregates are
@@ -2140,7 +2123,7 @@ object GraphOps {
         graft.Confs.derivedWidth(gw.sparkSession, nNodes, 8)) {
       louvainLoop(f, l2Rounds,
         f.checkpoint(str2.select($"n", $"n".as("com"))),
-        (com, r) => louvainSweepWeighted(bi2, str2, com, r, mb))
+        (com, r) => louvainSweepWeighted(bi2, str2, com, wTot, r, mb))
     }
     // Compose back: original node → its community's rank → that rank's
     // level-2 community rank → that rank's ORIGINAL level-1 label (so
@@ -2478,14 +2461,14 @@ object GraphOps {
     val p1rk = f.checkpoint(r1.join(mb(rt), $"part" === $"c1")
       .select($"n", $"rk".as("com")))
     f.release(r1, rt)
-    val (bi2, str2) = superGraph(f, gw, p1rk, wTot, mb)
+    val (bi2, str2) = superGraph(f, gw, p1rk, mb)
     // r12: level-2 loop at the node-census-derived exchange width
     // (see [[louvainTwoLevelLabels]]).
     val (com2, _) = graft.Confs.withShufflePartitions(gw.sparkSession,
         graft.Confs.derivedWidth(gw.sparkSession, nNodes, 8)) {
       louvainLoop(f, l2Rounds,
         f.checkpoint(str2.select($"n", $"n".as("com"))),
-        (com, r) => louvainSweepWeighted(bi2, str2, com, r, mb))
+        (com, r) => louvainSweepWeighted(bi2, str2, com, wTot, r, mb))
     }
     // r13: checkpoint the composed labels before the terminal
     // refinement — splitByComponents walks its label frame three times

@@ -1336,10 +1336,10 @@ class PlanAuditSpec extends SparkTestBase {
       .select((col("id") % 12).as("src"), ((col("id") + 5) % 12).as("dst"))
       .localCheckpoint()
     val deg = bi.groupBy(col("src").as("n")).agg(count(lit(1)).as("kn"))
-      .withColumn("m", lit(30L)).localCheckpoint()
+      .localCheckpoint()
     val com = deg.select(col("n"), col("n").as("com")).localCheckpoint()
     val p = planNoAutoBroadcast(graft.queries.GraphOps.louvainSweep(
-      bi, deg, com, 1, graft.queries.GraphOps.maybeBroadcast(12)))
+      bi, deg, com, 30L, 1, graft.queries.GraphOps.maybeBroadcast(12)))
     // Below BroadcastRowCap the knc census attaches labels to the edge
     // list by broadcast — the edge frame is never pre-shuffled — and
     // deg/tot/cur join the candidate stream the same way; with
@@ -1362,7 +1362,7 @@ class PlanAuditSpec extends SparkTestBase {
     // Past the cap the SAME sweep must drop every hint: the gate is the
     // plan's only source of broadcasts at scale.
     val pBig = planNoAutoBroadcast(graft.queries.GraphOps.louvainSweep(
-      bi, deg, com, 1,
+      bi, deg, com, 30L, 1,
       graft.queries.GraphOps.maybeBroadcast(
         graft.queries.GraphOps.BroadcastRowCap + 1)))
     assert(!pBig.contains("BroadcastHashJoin"),
@@ -1578,10 +1578,10 @@ class PlanAuditSpec extends SparkTestBase {
         (col("id") % 7 + 1L).as("w"))
       .localCheckpoint()
     val str = bi.groupBy(col("src").as("n")).agg(sum(col("w")).as("kn"))
-      .withColumn("w2", expr("CAST(300 AS DECIMAL(20,0))")).localCheckpoint()
+      .localCheckpoint()
     val com = str.select(col("n"), col("n").as("com")).localCheckpoint()
     val p = planNoAutoBroadcast(graft.queries.GraphOps.louvainSweepWeighted(
-      bi, str, com, 1, graft.queries.GraphOps.maybeBroadcast(12)))
+      bi, str, com, 150L, 1, graft.queries.GraphOps.maybeBroadcast(12)))
     // The weighted sweep keeps the unweighted pin's contract (q495 pin
     // above is the template): below BroadcastRowCap the knc census
     // attaches labels to the weighted edge list by broadcast — the
@@ -1604,7 +1604,7 @@ class PlanAuditSpec extends SparkTestBase {
     // Past the cap the SAME sweep must drop every hint: the gate is the
     // plan's only source of broadcasts at scale.
     val pBig = planNoAutoBroadcast(graft.queries.GraphOps.louvainSweepWeighted(
-      bi, str, com, 1,
+      bi, str, com, 150L, 1,
       graft.queries.GraphOps.maybeBroadcast(
         graft.queries.GraphOps.BroadcastRowCap + 1)))
     assert(!pBig.contains("BroadcastHashJoin"),

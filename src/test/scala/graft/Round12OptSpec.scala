@@ -84,7 +84,6 @@ class Round12OptSpec extends SparkTestBase {
       .unionAll(g.select($"v".as("src"), $"u".as("dst"), $"sup".as("w")))
       .localCheckpoint()
     val str = bi.groupBy($"src".as("n")).agg(sum($"w").as("kn"))
-      .withColumn("w2", expr(s"CAST(2 * ${wTot}L AS DECIMAL(20,0))"))
       .localCheckpoint()
     val com0 = str.select($"n", $"n".as("com")).localCheckpoint()
     val mb = graft.queries.GraphOps.maybeBroadcast(7)
@@ -116,7 +115,7 @@ class Round12OptSpec extends SparkTestBase {
     var opt = com0
     for (r <- 1 to 4) {
       ref = refSweep(ref, r).localCheckpoint()
-      opt = graft.queries.GraphOps.louvainSweepWeighted(bi, str, opt, r, mb)
+      opt = graft.queries.GraphOps.louvainSweepWeighted(bi, str, opt, wTot, r, mb)
         .localCheckpoint()
       val diff = opt.select($"n", $"com".as("ca"))
         .join(ref.select($"n", $"com".as("cb")), Seq("n"))

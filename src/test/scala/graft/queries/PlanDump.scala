@@ -43,19 +43,19 @@ object PlanDump {
       .select((col("id") % 12).as("src"), ((col("id") + 5) % 12).as("dst"))
       .localCheckpoint()
     val deg = bi.groupBy(col("src").as("n")).agg(count(lit(1)).as("kn"))
-      .withColumn("m", lit(30L)).localCheckpoint()
+      .localCheckpoint()
     val com = deg.select(col("n"), col("n").as("com")).localCheckpoint()
     dump("louvain_sweep", planOf(GraphOps.louvainSweep(
-      bi, deg, com, 1, GraphOps.maybeBroadcast(12))))
+      bi, deg, com, 30L, 1, GraphOps.maybeBroadcast(12))))
     val biW = spark.range(0, 60)
       .select((col("id") % 12).as("src"), ((col("id") + 5) % 12).as("dst"),
         (col("id") % 7 + 1).as("w"))
       .localCheckpoint()
     val str = biW.groupBy(col("src").as("n")).agg(sum(col("w")).as("kn"))
-      .withColumn("w2", expr("CAST(480 AS DECIMAL(20,0))")).localCheckpoint()
+      .localCheckpoint()
     val comW = str.select(col("n"), col("n").as("com")).localCheckpoint()
     dump("louvain_sweep_weighted", planOf(GraphOps.louvainSweepWeighted(
-      biW, str, comW, 1, GraphOps.maybeBroadcast(12))))
+      biW, str, comW, 240L, 1, GraphOps.maybeBroadcast(12))))
 
     // ---- q126/q378 PageRank sweep keying (the full query is
     // Eager-severed, so the informative plan is one contribution sweep
